@@ -25,36 +25,19 @@ object Bfs {
     *                  undirected semantics
     * @param vertices (vid) full vertex set
     * @param seeds    (vid) distance-0 set (deduplicated here)
-    * @param localKernelMax if BOTH the arc set and the seed set are at
-    *        most this many rows (and their estimated collected bytes fit
-    *        [[DriverGate.defaultMaxBytes]]), run ONE driver-side
-    *        multi-source BFS over collected arrays instead of
-    *        O(diameter) distributed rounds — the same bounded small-side
-    *        gate as CC/HITS/Triangles (each distributed round is ~3
-    *        scheduled stages of pure barrier floor on a tiny graph; hop
-    *        counts are integers, so the paths are spec-pinned EXACTLY
-    *        equal). At web scale the arc count stays above any gate and
-    *        the frontier loop runs. 0 disables the gate.
+    * @param localKernelMax row cap of the [[LocalGraph]] gate on the arcs
+    *        and the seeds (0 disables it): an admitted graph runs ONE
+    *        driver multi-source BFS instead of O(diameter) distributed
+    *        rounds of ~3 scheduled stages each. Hop counts are integers,
+    *        so both paths agree exactly.
     * @return (vid, hops) for EVERY vertex; unreachable → null hops
-    */
-  /** @param sizeHint |arcs| + |seeds| if the caller already knows it —
-    *        a hint ABOVE `localKernelMax` skips the gate's O(E) probe
-    *        scan entirely (pure overhead at web scale, where the gate
-    *        can never fire; the Hits.run sizeHint pattern, round-6
-    *        advice). Negative = unknown, probe runs.
     */
   def hops(arcs: DataFrame, vertices: DataFrame, seeds: DataFrame,
            maxRounds: Int = 64, checkpointEvery: Int = 5,
-           localKernelMax: Long = 1L << 20, sizeHint: Long = -1L): DataFrame = {
+           localKernelMax: Long = 1L << 20): DataFrame = {
     val spark = arcs.sparkSession
-    if (localKernelMax > 0 && (sizeHint < 0L || sizeHint <= localKernelMax)) {
-      val pa = DriverGate.pairProbe(arcs.select("src", "dst"), "src", "dst")
-      if (pa.rows <= localKernelMax && pa.estBytes <= DriverGate.defaultMaxBytes) {
-        val ps = DriverGate.colProbe(seeds.select("vid"), "vid")
-        if (ps.rows <= localKernelMax && ps.estBytes <= DriverGate.defaultMaxBytes)
-          return hopsLocal(arcs, vertices, seeds, maxRounds)
-      }
-    }
+    if (LocalGraph.admit(localKernelMax, arcs, seeds).isDefined)
+      return hopsLocal(LocalGraph.collect(arcs, Some(seeds)), vertices, maxRounds)
     def reRoot(df: DataFrame): DataFrame = spark.createDataFrame(df.rdd, df.schema)
     val a0 = arcs.select("src", "dst").persist(StorageLevel.MEMORY_AND_DISK)
 
@@ -102,71 +85,12 @@ object Bfs {
     out
   }
 
-  /** The gated driver kernel: identical multi-source BFS over collected
-    * int-indexed adjacency arrays, levels capped at `maxRounds` like the
-    * distributed loop.
+  /** The gated driver kernel: the same multi-source BFS over dense-id
+    * adjacency, levels capped at `maxRounds` like the distributed loop.
     */
-  private def hopsLocal(arcs: DataFrame, vertices: DataFrame, seeds: DataFrame,
-                        maxRounds: Int): DataFrame = {
-    val spark = arcs.sparkSession
-    val idx = new java.util.HashMap[Any, Integer]()
-    val vids = new java.util.ArrayList[Any]()
-    def id(v: Any): Int = {
-      val got = idx.get(v)
-      if (got != null) got.intValue()
-      else { val i = vids.size(); idx.put(v, i); vids.add(v); i }
-    }
-    val arcRows = arcs.select("src", "dst").collect()
-    val ea = new Array[Int](arcRows.length)
-    val eb = new Array[Int](arcRows.length)
-    var i = 0
-    while (i < arcRows.length) {
-      ea(i) = id(arcRows(i).get(0)); eb(i) = id(arcRows(i).get(1)); i += 1
-    }
-    val seedIds = seeds.select("vid").distinct().collect().map(r => id(r.get(0)))
-    val n = vids.size()
-    // CSR out-adjacency
-    val outDeg = new Array[Int](n)
-    i = 0; while (i < arcRows.length) { outDeg(ea(i)) += 1; i += 1 }
-    val start = new Array[Int](n + 1)
-    i = 0; while (i < n) { start(i + 1) = start(i) + outDeg(i); i += 1 }
-    val adj = new Array[Int](arcRows.length)
-    val fill = new Array[Int](n)
-    i = 0
-    while (i < arcRows.length) {
-      adj(start(ea(i)) + fill(ea(i))) = eb(i); fill(ea(i)) += 1; i += 1
-    }
-    val dist = Array.fill(n)(-1L)
-    var frontier = seedIds.distinct.toArray
-    frontier.foreach(s => dist(s) = 0L)
-    var d = 0L
-    while (frontier.nonEmpty && d < maxRounds) {
-      d += 1
-      val next = scala.collection.mutable.ArrayBuffer.empty[Int]
-      frontier.foreach { u =>
-        var p = start(u)
-        while (p < start(u + 1)) {
-          val v = adj(p)
-          if (dist(v) < 0L) { dist(v) = d; next += v }
-          p += 1
-        }
-      }
-      frontier = next.toArray
-    }
-    val vidType = vertices.schema("vid").dataType
-    val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
-    i = 0
-    while (i < n) {
-      if (dist(i) >= 0L) rows.add(org.apache.spark.sql.Row(vids.get(i), dist(i)))
-      i += 1
-    }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("vid", vidType),
-      org.apache.spark.sql.types.StructField("hops", org.apache.spark.sql.types.LongType)))
-    val lbl = spark.createDataFrame(rows, schema)
-    vertices.select("vid")
-      .join(broadcast(lbl), Seq("vid"), "left")
-      .select(col("vid"), col("hops"))
-      .localCheckpoint(true)
+  private def hopsLocal(g: LocalGraph, vertices: DataFrame, maxRounds: Int): DataFrame = {
+    val dist = g.hops(g.csr(), g.vertexRows, maxRounds)
+    val reached = dist.indices.filter(dist(_) >= 0L).toArray
+    g.toFrame(vertices, "vid" -> reached, "hops" -> reached.map(dist(_))).localCheckpoint(true)
   }
 }

@@ -85,24 +85,14 @@ object ConnectedComponents {
     * @param vertices (vid) every vertex incl. isolated ones
     * @param preContract run [[localContract]] before the star loop
     *        (identical result — spec-pinned; off only for cross-checks)
-    * @param localFinishMax if the DISTINCT contracted pair set has at most
-    *        this many pairs, finish with ONE driver-side union-find
-    *        instead of the star loop (the standard small-remainder phase
-    *        of two-phase CC). The collect is hard-bounded (default 2²⁰
-    *        pairs — the same gated-small-side pattern as
-    *        PprShard.csrMaxVertices and the dedup exact-vs-LSH gates) and
-    *        the count that gates it is the probe the loop needs anyway.
-    *        The gate ALSO bounds the ESTIMATED COLLECTED BYTES at
-    *        [[DriverGate.defaultMaxBytes]] (128 MB): a pair count that is
-    *        fine for longs (~64 MB of boxed Rows) is hundreds of MB for
-    *        ~40-char string entity ids, so string-vid graphs fall through
-    *        to the star loop earlier (round-5 advice; same single probe
-    *        action either way).
-    *        Rationale: the star loop costs 5-6 full exchanges of the pair
-    *        set PER ROUND times O(log V) rounds — pure driver-barrier
-    *        floor when the remainder would fit in one task. At 100 TB the
-    *        contracted remainder stays above any such gate and the star
-    *        loop runs; 0 disables the gate (spec cross-checks).
+    * @param localFinishMax row cap of the [[LocalGraph]] gate on the
+    *        DISTINCT contracted pair set (0 disables it): an admitted
+    *        remainder is finished by ONE driver-side union-find instead of
+    *        the star loop (the standard small-remainder phase of two-phase
+    *        CC), which costs 5-6 full exchanges of the pair set per round
+    *        times O(log V) rounds — pure driver-barrier floor when the
+    *        remainder fits in one task. The gate's probe is the one the
+    *        loop needs anyway.
     * @param checkpointDir durable-resume directory ([[CcCheckpoint]]):
     *        when set, the contracted pair set is persisted to disk every
     *        `diskCheckpointEvery` rounds, and a run over a dir holding a
@@ -152,50 +142,26 @@ object ConnectedComponents {
     // single action also estimates collected bytes for the driver gate.
     val p0 = DriverGate.pairProbe(cur, "a", "b")
     var nEdges = p0.rows
-    // Driver union-find finish on a small contracted remainder. Only for
-    // vid types whose natural JVM order matches SQL least/greatest (the
-    // root choice IS the published component id here, unlike
-    // localContract's arbitrary-root star): long/int/string cover every
-    // graph in the engine; anything else falls through to the star loop.
-    val vidType = cur.schema("a").dataType
-    if (nEdges > 0L && nEdges <= localFinishMax &&
-        p0.estBytes <= DriverGate.defaultMaxBytes &&
-        DriverGate.naturallyOrdered(vidType)) {
-      def less(x: Any, y: Any): Boolean = (x, y) match {
-        case (p: Long, q: Long)     => p < q
-        case (p: Int, q: Int)       => p < q
-        case (p: String, q: String) => p < q
-        case _ => throw new IllegalStateException("unreachable: gated above")
-      }
-      val parent = new java.util.HashMap[Any, Any]()
-      def find(x: Any): Any = {
+    // Driver union-find finish on a small contracted remainder.
+    if (nEdges > 0L && LocalGraph.fits(localFinishMax, p0) &&
+        LocalGraph.admits(cur.schema("a").dataType)) {
+      val g = LocalGraph.collect(cur.select(col("a").as("src"), col("b").as("dst")))
+      val parent = Array.range(0, g.n)
+      def find(x: Int): Int = {
         var r = x
-        while (parent.getOrDefault(r, r) != r) r = parent.get(r)
-        var c = x
-        while (parent.getOrDefault(c, c) != c) {
-          val n = parent.get(c); parent.put(c, r); c = n
-        }
+        while (parent(r) != r) r = parent(r)
+        var c = x // path compression
+        while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
         r
       }
-      val seen = new java.util.LinkedHashSet[Any]()
-      cur.collect().foreach { row =>
-        val a = row.get(0); val b = row.get(1)
-        seen.add(a); seen.add(b)
-        val ra = find(a); val rb = find(b)
-        // Union by MIN root: the surviving root is the component minimum,
-        // the same canonical id the star fixpoint converges to.
-        if (ra != rb) {
-          if (less(rb, ra)) parent.put(ra, rb) else parent.put(rb, ra)
-        }
+      // Union by MIN root: the surviving root is the component's min dense
+      // id, i.e. the SQL-min vid the star fixpoint converges to.
+      g.src.indices.foreach { e =>
+        val (ra, rb) = (find(g.src(e)), find(g.dst(e)))
+        if (ra < rb) parent(rb) = ra else parent(ra) = rb
       }
-      val lblRows = new java.util.ArrayList[org.apache.spark.sql.Row]()
-      seen.forEach(v => lblRows.add(org.apache.spark.sql.Row(v, find(v))))
-      val lblSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("vid", vidType),
-        org.apache.spark.sql.types.StructField("root", vidType)))
-      val lbl = spark.createDataFrame(lblRows, lblSchema)
-      val labels = vertices.select("vid")
-        .join(broadcast(lbl), Seq("vid"), "left")
+      val labels = g.toFrame(vertices, "vid" -> Array.range(0, g.n),
+          "root" -> Array.tabulate(g.n)(find))
         .select(col("vid"), coalesce(col("root"), col("vid")).as("component"))
       val pinned = labels.localCheckpoint(true)
       cur.unpersist(false)

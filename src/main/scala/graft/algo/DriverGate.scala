@@ -2,17 +2,15 @@ package graft.algo
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.StringType
 
-/** Size probe behind the bounded driver-side finishing kernels (CC's
-  * union-find, HITS' power kernel, Triangles' wedge count). The gates were
-  * originally row-count-only, which under-estimates driver heap for STRING
-  * vids: 2²⁰ pairs of longs collect to ~64 MB of boxed Rows, but the same
-  * pair count of ~40-char entity ids is hundreds of MB of Row/String
-  * objects (round-5 advice). The probe therefore also estimates COLLECTED
-  * bytes — fixed per-row Row/boxing overhead plus 2× the UTF-8 payload for
-  * strings (UTF-16 in-heap + object headers) — in the SAME single
-  * aggregate action the row count needs anyway.
+/** Size probes behind [[LocalGraph]]'s gate, which states the gate policy.
+  * Row counts alone under-estimate driver heap for STRING vids: 2²⁰ pairs
+  * of longs collect to ~64 MB of boxed Rows, but the same pair count of
+  * ~40-char entity ids is hundreds of MB of Row/String objects. Each probe
+  * therefore also estimates COLLECTED bytes — fixed per-row Row/boxing
+  * overhead plus 2× the UTF-8 payload for strings (UTF-16 in-heap + object
+  * headers) — in the SAME single aggregate action the row count needs.
   */
 private[algo] object DriverGate {
 
@@ -21,32 +19,42 @@ private[algo] object DriverGate {
     */
   val rowOverheadBytes = 64L
 
-  /** Default cap on estimated collected bytes for a driver finish
-    * (128 MB): keeps the long-vid gates at their documented 2²⁰-pair
-    * bound (~64 MB estimated) while long entity-id strings fall through
-    * to the distributed path well before the heap is at risk.
+  /** Cap on estimated collected bytes per probed frame (128 MB): keeps the
+    * long-vid gates at their 2²⁰-row bound (~64 MB estimated) while long
+    * entity-id strings fall through to the distributed path well before
+    * the heap is at risk.
     */
   val defaultMaxBytes = 1L << 27
 
-  case class Probe(rows: Long, checksum: Long, estBytes: Long)
+  /** @param integerWeights every probed weight is non-null and
+    *        integer-valued (true when no weight column was probed)
+    */
+  case class Probe(rows: Long, checksum: Long, estBytes: Long,
+                   integerWeights: Boolean = true)
 
   /** One aggregate action over a 2-column pair frame: row count,
     * order-insensitive content checksum (bit_xor of xxhash64 — CC's
-    * fixpoint probe), and the collected-bytes estimate.
+    * fixpoint probe), the collected-bytes estimate and, when `weight`
+    * names a column of `pairs`, whether all its values are integers.
     */
-  def pairProbe(pairs: DataFrame, a: String, b: String): Probe = {
+  def pairProbe(pairs: DataFrame, a: String, b: String,
+                weight: Option[String] = None): Probe = {
     val stringBytes = (pairs.schema(a).dataType, pairs.schema(b).dataType) match {
       case (StringType, StringType) => sum(octet_length(col(a)) + octet_length(col(b)))
       case (StringType, _) => sum(octet_length(col(a)))
       case (_, StringType) => sum(octet_length(col(b)))
       case _ => lit(null).cast("long")
     }
+    val intW = weight.fold(lit(true)) { w =>
+      val x = col(w).cast("double")
+      coalesce(bool_and(x.isNotNull && !isnan(x) && x === floor(x)), lit(true))
+    }
     val r = pairs.agg(count(lit(1)), expr(s"bit_xor(xxhash64($a, $b))"),
-      stringBytes.cast("long")).first()
+      stringBytes.cast("long"), intW).first()
     val n = r.getLong(0)
     val strB = if (r.isNullAt(2)) 0L else r.getLong(2)
     Probe(n, if (r.isNullAt(1)) 0L else r.getLong(1),
-      n * rowOverheadBytes + 2L * strB)
+      n * rowOverheadBytes + 2L * strB, r.getBoolean(3))
   }
 
   /** One aggregate action over a single-column frame: row count and the
@@ -62,40 +70,5 @@ private[algo] object DriverGate {
     val n = r.getLong(0)
     val strB = if (r.isNullAt(1)) 0L else r.getLong(1)
     Probe(n, 0L, n * rowOverheadBytes + 2L * strB)
-  }
-
-  /** Vid types whose natural JVM order matches SQL least/greatest — the
-    * precondition for a driver kernel whose published labels are the
-    * component/orientation minima.
-    */
-  def naturallyOrdered(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
-    case LongType | IntegerType | StringType => true
-    case _ => false
-  }
-
-  /** Ordering over collected vid values matching Spark SQL's sort order
-    * for the [[naturallyOrdered]] types. Strings compare as UNSIGNED
-    * UTF-8 bytes (Spark's UTF8String binary order) — java.lang.String's
-    * UTF-16 compareTo diverges for supplementary-plane codepoints, so
-    * the bytes are compared directly.
-    */
-  def sqlOrdering(dt: org.apache.spark.sql.types.DataType): Ordering[Any] = dt match {
-    case StringType => new Ordering[Any] {
-      def compare(x: Any, y: Any): Int = {
-        val a = x.asInstanceOf[String].getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        val b = y.asInstanceOf[String].getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        var i = 0
-        val n = math.min(a.length, b.length)
-        while (i < n) {
-          val c = (a(i) & 0xFF) - (b(i) & 0xFF)
-          if (c != 0) return c
-          i += 1
-        }
-        a.length - b.length
-      }
-    }
-    case LongType => Ordering.Long.asInstanceOf[Ordering[Any]].on[Any](_.asInstanceOf[Long])
-    case IntegerType => Ordering.Int.asInstanceOf[Ordering[Any]].on[Any](_.asInstanceOf[Int])
-    case other => throw new IllegalArgumentException(s"no SQL ordering for $other")
   }
 }

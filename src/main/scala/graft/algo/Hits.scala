@@ -32,39 +32,23 @@ object Hits {
 
   /** @param arcs     directed (src, dst, weight ≥ 0), no self-loops needed
     * @param vertices (vid) — every vertex, incl. ones without arcs
-    * @param localKernelMax if |arcs| + |vertices| is at most this, run the
-    *        whole double power iteration as ONE driver kernel over
-    *        collected arrays instead of 2·sweeps distributed half-steps
-    *        (same bounded-small-side gate as ConnectedComponents'
-    *        localFinishMax and PprShard's CSR: 20 sweeps over a tiny graph
-    *        are ~160 scheduled stages of pure barrier floor, measured 17 s
-    *        at bench sf0.1 on a 31-vertex graph vs <1 s gated; at web
-    *        scale the count stays above any gate and the shuffle loop
-    *        runs). Driver == distributed to 1e-12 (spec-pinned) — both
-    *        paths compute the same closed-form fixed-sweep update. 0
-    *        disables the gate.
-    * @param sizeHint known |arcs| + |vertices|, if the caller already has
-    *        it — skips the gate's probe job entirely (round-5 advice: the
-    *        probe is an O(E) scan that buys nothing at web scale, where
-    *        the gate can never trigger). Negative = unknown, probe runs
-    *        (as ONE union-aggregate action, not two counts).
+    * @param localKernelMax row cap of the [[LocalGraph]] gate (0 disables
+    *        it): an admitted graph runs the whole double power iteration
+    *        as ONE driver kernel instead of 2·sweeps distributed half-steps
+    *        (20 sweeps over a tiny graph are ~160 scheduled stages of pure
+    *        barrier floor, measured 17 s at bench sf0.1 on a 31-vertex
+    *        graph vs <1 s gated). Driver == distributed to 1e-12
+    *        (spec-pinned): both compute the same fixed-sweep update.
     * @return (vid, hub, authority), both L2-normalized at the last sweep
     */
   def run(arcs: DataFrame, vertices: DataFrame, sweeps: Int = 20,
-          checkpointEvery: Int = 5, localKernelMax: Long = 1L << 20,
-          sizeHint: Long = -1L): DataFrame = {
+          checkpointEvery: Int = 5, localKernelMax: Long = 1L << 20): DataFrame = {
     // sweeps = 0 would leave `auth` unbound (NPE at the final join) and has
     // no meaning anyway: HITS without a power step is just the init vector.
     require(sweeps >= 1, s"HITS needs at least one sweep (got $sweeps)")
     val spark = arcs.sparkSession
-    if (localKernelMax > 0) {
-      val sizes =
-        if (sizeHint >= 0L) sizeHint
-        else arcs.select(count(lit(1)).as("c"))
-          .unionAll(vertices.select(count(lit(1)).as("c")))
-          .agg(sum(col("c"))).first().getLong(0)
-      if (sizes <= localKernelMax) return runLocal(arcs, vertices, sweeps)
-    }
+    if (LocalGraph.admit(localKernelMax, arcs, vertices).isDefined)
+      return runLocal(LocalGraph.collect(arcs, Some(vertices), weighted = true), sweeps)
     // LAZY re-root: normalized() references its input twice (norm branch
     // + value branch) — without collapsing each half-step to a LogicalRDD
     // leaf the logical plan would grow 4^sweeps. The leaf's RDD lineage
@@ -127,60 +111,30 @@ object Hits {
     out
   }
 
-  /** The gated driver kernel: identical fixed-sweep update over collected
-    * arrays. Summation runs in collected-arc order — deterministic, and
-    * within fp ulp of the distributed partial-agg order (the q35 oracle
-    * rounds to 9 dp; the equality spec pins 1e-12).
+  /** The gated driver kernel: the same fixed-sweep update. Summation runs
+    * in collected-arc order — deterministic, and within fp ulp of the
+    * distributed partial-agg order (the q35 oracle rounds to 9 dp; the
+    * equality spec pins 1e-12). Arcs with an endpoint outside the vertex
+    * frame contribute nothing, as the distributed zero-fill over it.
     */
-  private def runLocal(arcs: DataFrame, vertices: DataFrame, sweeps: Int): DataFrame = {
-    val spark = arcs.sparkSession
-    val vidRows = vertices.select("vid").distinct().collect().map(_.get(0))
-    val idx = new java.util.HashMap[Any, java.lang.Integer]()
-    vidRows.zipWithIndex.foreach { case (v, i) => idx.put(v, i) }
-    val arcRows = arcs.select(col("src"), col("dst"),
-      col("weight").cast("double")).collect()
-    val n = vidRows.length
-    val src = new Array[Int](arcRows.length)
-    val dst = new Array[Int](arcRows.length)
-    val w = new Array[Double](arcRows.length)
-    var k = 0
-    arcRows.foreach { r =>
-      val s = idx.get(r.get(0)); val d = idx.get(r.get(1))
-      // Dangling arcs (endpoint outside `vertices`) contribute nothing,
-      // mirroring the distributed path's zero-fill over the vertex frame.
-      if (s != null && d != null) {
-        src(k) = s; dst(k) = d; w(k) = r.getDouble(2); k += 1
-      }
-    }
-    var hub = Array.fill(n)(1.0)
-    var auth = new Array[Double](n)
+  private def runLocal(g: LocalGraph, sweeps: Int): DataFrame = {
+    val verts = g.vertexRows.distinct
+    val inV = g.mask(verts)
+    val es = g.src.indices.filter(e => inV(g.src(e)) && inV(g.dst(e))).toArray
+    val hub = Array.fill(g.n)(1.0)
+    val auth = new Array[Double](g.n)
     def l2normalize(x: Array[Double]): Unit = {
-      var s = 0.0; var i = 0
-      while (i < n) { s += x(i) * x(i); i += 1 }
-      val nr = math.sqrt(s)
-      if (nr != 0.0) { i = 0; while (i < n) { x(i) /= nr; i += 1 } }
+      val nr = math.sqrt(x.map(v => v * v).sum)
+      if (nr != 0.0) x.indices.foreach(x(_) /= nr)
     }
-    var it = 0
-    while (it < sweeps) {
+    for (_ <- 0 until sweeps) {
       java.util.Arrays.fill(auth, 0.0)
-      var e = 0
-      while (e < k) { auth(dst(e)) += w(e) * hub(src(e)); e += 1 }
+      es.foreach(e => auth(g.dst(e)) += g.weight(e) * hub(g.src(e)))
       l2normalize(auth)
       java.util.Arrays.fill(hub, 0.0)
-      e = 0
-      while (e < k) { hub(src(e)) += w(e) * auth(dst(e)); e += 1 }
+      es.foreach(e => hub(g.src(e)) += g.weight(e) * auth(g.dst(e)))
       l2normalize(hub)
-      it += 1
     }
-    val vidType = vertices.schema("vid").dataType
-    val rows = new java.util.ArrayList[org.apache.spark.sql.Row](n)
-    vidRows.zipWithIndex.foreach { case (v, i) =>
-      rows.add(org.apache.spark.sql.Row(v, hub(i), auth(i)))
-    }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("vid", vidType),
-      org.apache.spark.sql.types.StructField("hub", org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("authority", org.apache.spark.sql.types.DoubleType)))
-    spark.createDataFrame(rows, schema)
+    g.frame("vid" -> verts, "hub" -> verts.map(hub(_)), "authority" -> verts.map(auth(_)))
   }
 }

@@ -56,25 +56,16 @@ object KCore {
     *         graph was measured to need a few hundred rounds —
     *         bench.KCoreProbe). Callers that explicitly tolerate bounds
     *         use [[runWithStats]] and check `converged` themselves.
+    * @param localKernelMax row cap of the [[LocalGraph]] gate (0 disables it)
     */
   def run(arcs: DataFrame, vertices: DataFrame, maxRounds: Int = 512,
-          verbose: Boolean = false, localKernelMax: Long = 1L << 20,
-          sizeHint: Long = -1L): DataFrame = {
-    // Bounded driver kernel (the CC/HITS/Bfs/Walks gate pattern): the
-    // h-index fixpoint is integer-exact, so the collected-array kernel is
-    // spec-pinned EXACTLY equal to the distributed event-driven loop; on
-    // a tiny graph the distributed rounds are pure scheduling floor
-    // (measured 2.2 s / 22 jobs at bench sf0.1 on 31 vertices). At web
-    // scale the arc count stays above any gate and the loop runs.
-    // `sizeHint` (|arcs| + |vertices| if known) skips the probe scan.
-    if (localKernelMax > 0 && (sizeHint < 0L || sizeHint <= localKernelMax)) {
-      val pa = DriverGate.pairProbe(arcs.select("src", "dst"), "src", "dst")
-      if (pa.rows <= localKernelMax && pa.estBytes <= DriverGate.defaultMaxBytes) {
-        val pv = DriverGate.colProbe(vertices.select("vid"), "vid")
-        if (pv.rows <= localKernelMax && pv.estBytes <= DriverGate.defaultMaxBytes)
-          return runLocal(arcs, vertices, maxRounds)
-      }
-    }
+          verbose: Boolean = false, localKernelMax: Long = 1L << 20): DataFrame = {
+    // Driver kernel under the [[LocalGraph]] gate: the h-index fixpoint is
+    // integer-exact, so it equals the distributed event-driven loop; on a
+    // tiny graph the distributed rounds are pure scheduling floor
+    // (measured 2.2 s / 22 jobs at bench sf0.1 on 31 vertices).
+    if (LocalGraph.admit(localKernelMax, arcs, vertices).isDefined)
+      return runLocal(LocalGraph.collect(arcs, Some(vertices)), maxRounds)
     val (out, rounds, converged) = runWithStats(arcs, vertices, maxRounds, verbose)
     require(converged,
       s"k-core h-index iteration did not converge within $rounds rounds " +
@@ -84,65 +75,34 @@ object KCore {
   }
 
   /** The gated driver kernel: synchronous h-index iteration to the same
-    * fixpoint over collected arrays (the event-driven distributed rounds
-    * skip only provably-unchanged vertices, so both converge to the
-    * unique coreness fixpoint — integer-exact equality).
+    * fixpoint (the event-driven distributed rounds skip only provably-
+    * unchanged vertices, so both reach the unique coreness fixpoint).
+    * One row per distinct vertex. Arcs count only from vertices in the
+    * vertex frame; a dangling dst endpoint still adds to its source's
+    * degree but holds value 0, as in the distributed degree init.
     */
-  private def runLocal(arcs: DataFrame, vertices: DataFrame, maxRounds: Int): DataFrame = {
-    val spark = arcs.sparkSession
-    val idx = new java.util.HashMap[Any, Integer]()
-    val vids = new java.util.ArrayList[Any]()
-    def id(v: Any): Int = {
-      val got = idx.get(v)
-      if (got != null) got.intValue()
-      else { val i = vids.size(); idx.put(v, i); vids.add(v); i }
-    }
-    // vertex universe = the distinct vertex frame (arcs endpoints outside
-    // it carry no output row, mirroring the distributed left join)
-    val vertRows = vertices.select("vid").distinct().collect().map(r => id(r.get(0)))
-    val nVerts = vids.size()
-    val arcRows = arcs.select("src", "dst").distinct().collect()
-      .filter(r => r.get(0) != r.get(1))
-    // CSR over src→dst restricted to known vertices on the src side; dst
-    // endpoints outside `vertices` still contribute degree (mirroring the
-    // distributed degree init, which counts ALL out-arcs of a vertex).
-    val ea = new scala.collection.mutable.ArrayBuffer[Int]()
-    val eb = new scala.collection.mutable.ArrayBuffer[Int]()
-    arcRows.foreach { r =>
-      val s = idx.get(r.get(0))
-      if (s != null && s.intValue() < nVerts) { ea += s.intValue(); eb += id(r.get(1)) }
-    }
-    val n = vids.size() // may exceed nVerts (dangling dst endpoints)
-    val deg = new Array[Int](n)
-    var i = 0
-    while (i < ea.length) { deg(ea(i)) += 1; i += 1 }
-    val start = new Array[Int](n + 1)
-    i = 0; while (i < n) { start(i + 1) = start(i) + deg(i); i += 1 }
-    val adj = new Array[Int](ea.length)
-    val fill = new Array[Int](n)
-    i = 0
-    while (i < ea.length) { adj(start(ea(i)) + fill(ea(i))) = eb(i); fill(ea(i)) += 1; i += 1 }
-    var c = new Array[Long](n)
-    i = 0; while (i < n) { c(i) = deg(i).toLong; i += 1 }
-    var next = new Array[Long](n)
+  private def runLocal(g: LocalGraph, maxRounds: Int): DataFrame = {
+    val verts = g.vertexRows.distinct
+    val inV = g.mask(verts)
+    val csr = g.csr(distinct = true, keep = (s, d) => inV(s) && s != d)
+    val off = csr.offsets
+    var c = Array.tabulate(g.n)(v => (off(v + 1) - off(v)).toLong)
+    var next = new Array[Long](g.n)
+    val buf = new Array[Long](if (g.n == 0) 0 else c.max.toInt)
     var round = 0
     var changed = true
-    val buf = new scala.collection.mutable.ArrayBuffer[Long]()
     while (changed && round < maxRounds) {
       changed = false
       var v = 0
-      while (v < n) {
-        var e = start(v)
-        buf.clear()
-        while (e < start(v + 1)) { buf += c(adj(e)); e += 1 }
-        val sorted = buf.sortInPlace()(Ordering.Long.reverse)
-        var h = 0L
+      while (v < g.n) {
+        // h-index of the neighbor values: largest h with h values >= h
+        val d = off(v + 1) - off(v)
         var k = 0
-        while (k < sorted.length) {
-          val m = math.min(k + 1L, sorted(k))
-          if (m > h) h = m
-          k += 1
-        }
+        while (k < d) { buf(k) = c(csr.dsts(off(v) + k)); k += 1 }
+        java.util.Arrays.sort(buf, 0, d)
+        var h = 0L
+        k = 0
+        while (k < d) { h = math.max(h, math.min(k + 1L, buf(d - 1 - k))); k += 1 }
         next(v) = math.min(c(v), h)
         if (next(v) != c(v)) changed = true
         v += 1
@@ -152,13 +112,7 @@ object KCore {
     }
     require(!changed || round < maxRounds,
       s"k-core h-index iteration did not converge within $maxRounds rounds")
-    val vidType = vertices.schema("vid").dataType
-    val rows = new java.util.ArrayList[org.apache.spark.sql.Row](nVerts)
-    vertRows.foreach(v => rows.add(org.apache.spark.sql.Row(vids.get(v), c(v))))
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("vid", vidType),
-      org.apache.spark.sql.types.StructField("coreness", org.apache.spark.sql.types.LongType)))
-    spark.createDataFrame(rows, schema).localCheckpoint(true)
+    g.frame("vid" -> verts, "coreness" -> verts.map(c(_))).localCheckpoint(true)
   }
 
   /** [[run]] plus (rounds executed, converged) — converged=false means

@@ -19,110 +19,60 @@ import org.apache.spark.storage.StorageLevel
   */
 object LabelProp {
 
+  /** @param localKernelMax row cap of the [[LocalGraph]] gate (0 disables
+    *        it). This kernel also needs integer-valued weights: its vote
+    *        sums are then exact in any order, so the driver kernel equals
+    *        the distributed rounds; fractional weights take those rounds.
+    */
   def run(arcs: DataFrame, vertices: DataFrame, maxIter: Int = 20,
-          checkpointEvery: Int = 5, localKernelMax: Long = 1L << 20,
-          sizeHint: Long = -1L): (DataFrame, Int) = {
-    // Bounded driver kernel (the CC/HITS/Bfs/Walks/KCore gate pattern):
-    // per distributed round one join + groupBy + window — pure scheduling
-    // floor on a tiny graph. Vote sums are sums of edge weights (integer-
-    // valued counts on every graph this engine builds), so the driver
-    // summation is exact and the paths are spec-pinned equal; label ids
-    // compare in SQL order via DriverGate.sqlOrdering. At web scale the
-    // arc count stays above any gate. `sizeHint` skips the probe scan.
-    if (localKernelMax > 0 && (sizeHint < 0L || sizeHint <= localKernelMax) &&
-        DriverGate.naturallyOrdered(vertices.schema("vid").dataType)) {
-      val pa = DriverGate.pairProbe(arcs.select("src", "dst"), "src", "dst")
-      if (pa.rows <= localKernelMax && pa.estBytes <= DriverGate.defaultMaxBytes) {
-        val pv = DriverGate.colProbe(vertices.select("vid"), "vid")
-        if (pv.rows <= localKernelMax && pv.estBytes <= DriverGate.defaultMaxBytes)
-          return runLocal(arcs, vertices, maxIter)
-      }
-    }
+          checkpointEvery: Int = 5, localKernelMax: Long = 1L << 20): (DataFrame, Int) = {
+    // Per distributed round one join + groupBy + window — pure scheduling
+    // floor on a tiny graph.
+    if (LocalGraph.admit(localKernelMax, arcs, vertices, integerWeights = true).isDefined)
+      return runLocal(LocalGraph.collect(arcs, Some(vertices), weighted = true), maxIter)
     runDistributed(arcs, vertices, maxIter, checkpointEvery)
   }
 
-  /** The gated driver kernel: identical synchronous min-tie-break update
-    * over collected arrays.
+  /** The gated driver kernel: the same synchronous min-tie-break update.
+    * Votes flow between vertices of the vertex frame only (the distributed
+    * join keys labels on src and aggregates into existing dst rows); one
+    * output row per input vertex row.
     */
-  private def runLocal(arcs: DataFrame, vertices: DataFrame,
-                       maxIter: Int): (DataFrame, Int) = {
-    val spark = arcs.sparkSession
-    val ord = DriverGate.sqlOrdering(vertices.schema("vid").dataType)
-    val idx = new java.util.HashMap[Any, Integer]()
-    val vids = new java.util.ArrayList[Any]()
-    def id(v: Any): Int = {
-      val got = idx.get(v)
-      if (got != null) got.intValue()
-      else { val i = vids.size(); idx.put(v, i); vids.add(v); i }
-    }
-    val vertRows = vertices.select("vid").collect().map(r => id(r.get(0)))
-    val nVerts = vids.size()
-    val arcRows = arcs.select("src", "dst", "weight").collect()
-    // votes flow src→dst; only rows whose BOTH endpoints are state
-    // vertices matter (the distributed join keys labels on src and
-    // aggregates into dst rows that exist in the state)
-    val ea = new scala.collection.mutable.ArrayBuffer[Int]()
-    val eb = new scala.collection.mutable.ArrayBuffer[Int]()
-    val ew = new scala.collection.mutable.ArrayBuffer[Double]()
-    arcRows.foreach { r =>
-      val s = idx.get(r.get(0)); val d = idx.get(r.get(1))
-      if (s != null && s < nVerts && d != null && d < nVerts) {
-        ea += s.intValue(); eb += d.intValue()
-        ew += r.getAs[Number]("weight").doubleValue()
-      }
-    }
-    var labels = Array.tabulate(nVerts)(i => i) // label = own index initially
+  private def runLocal(g: LocalGraph, maxIter: Int): (DataFrame, Int) = {
+    val inV = g.mask(g.vertexRows)
+    val in = g.csr(keep = (s, d) => inV(s) && inV(d), flip = (_, _) => true)
+    var labels = Array.range(0, g.n) // label = own dense id initially
+    val votes = new Array[Double](g.n) // per-label weight sum, reset per vertex
     var iter = 0
     var changed = 1
     while (changed > 0 && iter < maxIter) {
       changed = 0
-      val next = new Array[Int](nVerts)
-      // per-vertex vote map label -> weight sum
-      val votes = Array.fill(nVerts)(
-        null.asInstanceOf[java.util.HashMap[Integer, java.lang.Double]])
-      var e = 0
-      while (e < ea.length) {
-        val d = eb(e)
-        var m = votes(d)
-        if (m == null) { m = new java.util.HashMap[Integer, java.lang.Double](); votes(d) = m }
-        val l = labels(ea(e))
-        val prev = m.get(Integer.valueOf(l))
-        m.put(l, if (prev == null) ew(e) else prev.doubleValue() + ew(e))
-        e += 1
-      }
+      val next = labels.clone()
       var v = 0
-      while (v < nVerts) {
-        val m = votes(v)
-        if (m == null) next(v) = labels(v)
-        else {
-          var bestLabel = -1
-          var bestW = Double.NegativeInfinity
-          val it = m.entrySet().iterator()
-          while (it.hasNext) {
-            val en = it.next()
-            val l = en.getKey.intValue()
-            val w = en.getValue.doubleValue()
-            if (w > bestW ||
-                (w == bestW && ord.compare(vids.get(l), vids.get(bestLabel)) < 0)) {
-              bestLabel = l; bestW = w
-            }
+      while (v < g.n) {
+        val (lo, hi) = (in.offsets(v), in.offsets(v + 1))
+        if (hi > lo) {
+          var e = lo
+          while (e < hi) { votes(labels(in.dsts(e))) += in.weights(e); e += 1 }
+          var best = labels(in.dsts(lo))
+          e = lo
+          while (e < hi) {
+            val l = labels(in.dsts(e))
+            if (votes(l) > votes(best) || (votes(l) == votes(best) && l < best)) best = l
+            e += 1
           }
-          next(v) = bestLabel
-          if (next(v) != labels(v)) changed += 1
+          e = lo
+          while (e < hi) { votes(labels(in.dsts(e))) = 0.0; e += 1 }
+          next(v) = best
+          if (best != labels(v)) changed += 1
         }
         v += 1
       }
       labels = next
       iter += 1
     }
-    val vidType = vertices.schema("vid").dataType
-    val rows = new java.util.ArrayList[org.apache.spark.sql.Row](vertRows.length)
-    // one output row per input vertex ROW (distributed keeps duplicates)
-    vertRows.foreach(v => rows.add(org.apache.spark.sql.Row(vids.get(v), vids.get(labels(v)))))
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("vid", vidType),
-      org.apache.spark.sql.types.StructField("label", vidType)))
-    (spark.createDataFrame(rows, schema).localCheckpoint(true), iter)
+    val vs = g.vertexRows
+    (g.frame("vid" -> vs, "label" -> vs.map(labels(_))).localCheckpoint(true), iter)
   }
 
   private def runDistributed(arcs: DataFrame, vertices: DataFrame, maxIter: Int,

@@ -46,8 +46,8 @@ object Neighborhood {
     */
   def exactDistribution(arcs: DataFrame, vertices: DataFrame,
                         maxRounds: Int = 64, checkpointEvery: Int = 5,
-                        localKernelMax: Long = 1L << 20, sizeHint: Long = -1L): DataFrame =
-    exactDistances(arcs, vertices, maxRounds, checkpointEvery, localKernelMax, sizeHint)
+                        localKernelMax: Long = 1L << 20): DataFrame =
+    exactDistances(arcs, vertices, maxRounds, checkpointEvery, localKernelMax)
       .groupBy("hops").agg(count(lit(1)).as("pairs"))
       .orderBy("hops")
 
@@ -55,39 +55,26 @@ object Neighborhood {
     * directed graph — every ordered pair (root → vid) with its hop
     * distance; unreachable pairs absent, (v, v, 0) present. O(V·reach)
     * rows: the exact anchor for the sketch paths, not the 10^12-scale
-    * route (that is [[hyperball]]).
+    * route (that is [[hyperball]]). `localKernelMax` is the row cap of the
+    * [[LocalGraph]] gate (0 disables it).
     */
   def exactDistances(arcs: DataFrame, vertices: DataFrame,
                      maxRounds: Int = 64, checkpointEvery: Int = 5,
-                     localKernelMax: Long = 1L << 20, sizeHint: Long = -1L): DataFrame = {
+                     localKernelMax: Long = 1L << 20): DataFrame = {
     val spark = arcs.sparkSession
-    // Bounded driver kernel (the CC/HITS/Triangles/Bfs gate pattern):
-    // all-roots BFS over collected arrays when the graph is small. The
-    // gate bounds the OUTPUT too — the result is O(roots·reach) pairs,
-    // so the product roots × (2·arcs + 1) (reach ⊆ arc endpoints ∪ root)
-    // must fit a driver-safe row count, not just the inputs. Hop counts
-    // are integers: paths spec-pinned exactly equal. 0 disables. A
-    // sizeHint (|arcs| + |vertices|) above the gate skips the probe scan
-    // entirely — pure overhead at web scale (round-6 advice, the
-    // Hits.run sizeHint pattern).
-    if (localKernelMax > 0 && (sizeHint < 0L || sizeHint <= localKernelMax)) {
-      val pa = DriverGate.pairProbe(arcs.select("src", "dst"), "src", "dst")
-      if (pa.rows <= localKernelMax && pa.estBytes <= DriverGate.defaultMaxBytes) {
-        val pv = DriverGate.colProbe(vertices.select("vid"), "vid")
-        // Output cap in ROWS and BYTES: the result is O(roots·reach)
-        // (root, vid, hops) rows, each carrying two vid payloads like an
-        // arc row — scale the row cap by the probed per-arc-row byte
-        // estimate so string-vid graphs fall through to the distributed
-        // loop before ~2M boxed Rows of 40-char ids sit on the driver
-        // (round-6 advice: the byte cap protected inputs, not output).
+    // Driver all-roots BFS under the [[LocalGraph]] gate. The result is
+    // O(roots·reach) (root, vid, hops) rows, each carrying two vid payloads
+    // like an arc row, so the gate also bounds the output: roots ×
+    // (2·arcs + 1) (reach ⊆ arc endpoints ∪ root) must fit 2²¹ rows and,
+    // at the probed per-arc-row byte estimate, twice the byte cap. Hop
+    // counts are integers: both paths agree exactly.
+    val admitted = LocalGraph.admit(localKernelMax, arcs, vertices).exists {
+      case (pa, pv) =>
         val outRows = pv.rows * (2L * pa.rows + 1L)
         val perRowB = pa.estBytes / math.max(1L, pa.rows) + 8L
-        if (pv.estBytes <= DriverGate.defaultMaxBytes &&
-            outRows <= (1L << 21) &&
-            outRows * perRowB <= 2L * DriverGate.defaultMaxBytes)
-          return exactDistancesLocal(arcs, vertices, maxRounds)
-      }
+        outRows <= (1L << 21) && outRows * perRowB <= 2L * DriverGate.defaultMaxBytes
     }
+    if (admitted) return exactDistancesLocal(LocalGraph.collect(arcs, Some(vertices)), maxRounds)
     def reRoot(df: DataFrame): DataFrame = spark.createDataFrame(df.rdd, df.schema)
     val a0 = arcs.select("src", "dst").distinct().persist(StorageLevel.MEMORY_AND_DISK)
 
@@ -132,75 +119,22 @@ object Neighborhood {
     out
   }
 
-  /** The gated driver kernel: per-root BFS over one collected int-indexed
-    * CSR (arcs deduplicated like the distributed path), levels capped at
-    * `maxRounds`. Emits the identical (root, vid, hops) pair set.
+  /** The gated driver kernel: per-root BFS over the distinct arcs, levels
+    * capped at `maxRounds`. Emits the identical (root, vid, hops) pair set:
+    * one hop-0 row per INPUT vertex row, like the distributed state init,
+    * while everything past hop 0 is per distinct root, like its groupBy.
     */
-  private def exactDistancesLocal(arcs: DataFrame, vertices: DataFrame,
-                                  maxRounds: Int): DataFrame = {
-    val spark = arcs.sparkSession
-    val idx = new java.util.HashMap[Any, Integer]()
-    val vids = new java.util.ArrayList[Any]()
-    def id(v: Any): Int = {
-      val got = idx.get(v)
-      if (got != null) got.intValue()
-      else { val i = vids.size(); idx.put(v, i); vids.add(v); i }
+  private def exactDistancesLocal(g: LocalGraph, maxRounds: Int): DataFrame = {
+    val csr = g.csr(distinct = true)
+    val (roots, at, hops) = (Array.newBuilder[Int], Array.newBuilder[Int], Array.newBuilder[Long])
+    def emit(r: Int, v: Int, d: Long): Unit = { roots += r; at += v; hops += d }
+    g.vertexRows.foreach(r => emit(r, r, 0L))
+    g.vertexRows.distinct.foreach { r =>
+      val dist = g.hops(csr, Array(r), maxRounds)
+      dist.indices.foreach(v => if (dist(v) > 0L) emit(r, v, dist(v)))
     }
-    val arcRows = arcs.select("src", "dst").distinct().collect()
-    val ea = new Array[Int](arcRows.length)
-    val eb = new Array[Int](arcRows.length)
-    var i = 0
-    while (i < arcRows.length) {
-      ea(i) = id(arcRows(i).get(0)); eb(i) = id(arcRows(i).get(1)); i += 1
-    }
-    // Parity with the distributed path on duplicate `vertices` rows: the
-    // state init there emits one (v, v, 0) row PER INPUT ROW, while the
-    // groupBy relaxation dedups everything past hop 0 — mirror exactly.
-    val rootRows = vertices.select("vid").collect().map(r => id(r.get(0)))
-    val rootIds = rootRows.distinct
-    val n = vids.size()
-    val outDeg = new Array[Int](n)
-    i = 0; while (i < arcRows.length) { outDeg(ea(i)) += 1; i += 1 }
-    val start = new Array[Int](n + 1)
-    i = 0; while (i < n) { start(i + 1) = start(i) + outDeg(i); i += 1 }
-    val adj = new Array[Int](arcRows.length)
-    val fill = new Array[Int](n)
-    i = 0
-    while (i < arcRows.length) {
-      adj(start(ea(i)) + fill(ea(i))) = eb(i); fill(ea(i)) += 1; i += 1
-    }
-    val vidType = vertices.schema("vid").dataType
-    val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
-    val dist = new Array[Long](n)
-    rootRows.foreach(r => // one hop-0 row per INPUT row (dup-parity above)
-      rows.add(org.apache.spark.sql.Row(vids.get(r), vids.get(r), 0L)))
-    rootIds.foreach { r =>
-      java.util.Arrays.fill(dist, -1L)
-      dist(r) = 0L
-      var frontier = Array(r)
-      var d = 0L
-      while (frontier.nonEmpty && d < maxRounds) {
-        d += 1
-        val next = scala.collection.mutable.ArrayBuffer.empty[Int]
-        frontier.foreach { u =>
-          var p = start(u)
-          while (p < start(u + 1)) {
-            val v = adj(p)
-            if (dist(v) < 0L) {
-              dist(v) = d; next += v
-              rows.add(org.apache.spark.sql.Row(vids.get(r), vids.get(v), d))
-            }
-            p += 1
-          }
-        }
-        frontier = next.toArray
-      }
-    }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("root", vidType),
-      org.apache.spark.sql.types.StructField("vid", vidType),
-      org.apache.spark.sql.types.StructField("hops", org.apache.spark.sql.types.LongType)))
-    spark.createDataFrame(rows, schema).localCheckpoint(true)
+    g.frame("root" -> roots.result(), "vid" -> at.result(), "hops" -> hops.result())
+      .localCheckpoint(true)
   }
 
   /** Exact INBOUND harmonic centrality H(v) = Σ_{u ≠ v, d(u,v) < ∞}
@@ -256,31 +190,25 @@ object Neighborhood {
     *
     * lgK=12 → 4 KiB per vertex, ~1.6% per-ball standard error; at 10^12
     * pages the state is sharded by vid and never collected.
+    * `localKernelMax` is the row cap of the [[LocalGraph]] gate (0
+    * disables it).
     */
   def hyperball(arcs: DataFrame, vertices: DataFrame, lgK: Int = 12,
-                maxRounds: Int = 64, localKernelMax: Long = 1L << 20,
-                sizeHint: Long = -1L): (Seq[(Int, Double)], DataFrame) = {
+                maxRounds: Int = 64, localKernelMax: Long = 1L << 20)
+      : (Seq[(Int, Double)], DataFrame) = {
     val spark = arcs.sparkSession
-    // Bounded driver kernel (the r7 Walks/KCore/LPA gate family): each
-    // distributed round is a join + two aggregates + a checkpoint — pure
-    // scheduling floor on a tiny graph. The kernel calls the SAME RegHll
-    // statics (hash, register update, max-merge, estimate), so the
-    // per-vertex (ball_size, harm) frame is bit-identical; only the
-    // curve's Σ-size differs in summation ORDER (few ulps — every
-    // consumer applies a ±5% sketch gate). The vertex bound additionally
-    // caps register memory (V × 2^lgK bytes ≤ 256 MB). `sizeHint` above
-    // the gate skips the probe scans.
-    if (localKernelMax > 0 && (sizeHint < 0L || sizeHint <= localKernelMax) &&
-        vertices.schema("vid").dataType ==
-          org.apache.spark.sql.types.LongType) {
-      val pa = DriverGate.pairProbe(arcs.select("src", "dst"), "src", "dst")
-      if (pa.rows <= localKernelMax && pa.estBytes <= DriverGate.defaultMaxBytes) {
-        val pv = DriverGate.colProbe(vertices.select("vid"), "vid")
-        if (pv.rows <= localKernelMax && pv.estBytes <= DriverGate.defaultMaxBytes &&
-            pv.rows * org.apache.spark.sql.graftx.RegHll.numRegisters(lgK).toLong <= (1L << 28))
-          return hyperballLocal(arcs, vertices, lgK, maxRounds)
-      }
-    }
+    // Driver kernel under the [[LocalGraph]] gate, for Long vids only (the
+    // kernel hashes the long like regHllAgg does) and at most 256 MB of
+    // registers (V × 2^lgK bytes): each distributed round is a join + two
+    // aggregates + a checkpoint — pure scheduling floor on a tiny graph.
+    // The kernel calls the SAME RegHll statics (hash, register update,
+    // max-merge, estimate), so the per-vertex (ball_size, harm) frame is
+    // bit-identical; only the curve's Σ-size differs in summation ORDER
+    // (few ulps — every consumer applies a ±5% sketch gate).
+    val admitted = vertices.schema("vid").dataType == org.apache.spark.sql.types.LongType &&
+      LocalGraph.admit(localKernelMax, arcs, vertices).exists(ps =>
+        ps._2.rows * org.apache.spark.sql.graftx.RegHll.numRegisters(lgK).toLong <= (1L << 28))
+    if (admitted) return hyperballLocal(LocalGraph.collect(arcs, Some(vertices)), lgK, maxRounds)
     val nPart = spark.sessionState.conf.numShufflePartitions
     // ckpt = materialize + keep partitioning + BOUNDED stats (raw
     // localCheckpoint carries originStats whose sizeInBytes compounds
@@ -345,63 +273,50 @@ object Neighborhood {
     (curve.reverse, balls)
   }
 
-  /** The gated driver kernel: identical HyperBall rounds over collected
-    * arrays, on the SAME [[org.apache.spark.sql.graftx.RegHll]] register
-    * operations the distributed aggregates run — register-max union is
-    * order-insensitive, the estimator scans registers in index order,
-    * and the per-round harm accumulation is per-vertex sequential, so
-    * the (vid, ball_size, harm) frame is exactly the distributed answer.
+  /** The gated driver kernel: identical HyperBall rounds on the SAME
+    * [[org.apache.spark.sql.graftx.RegHll]] register operations the
+    * distributed aggregates run — register-max union is order-insensitive,
+    * the estimator scans registers in index order, and the per-round harm
+    * accumulation is per-vertex sequential, so the (vid, ball_size, harm)
+    * frame is exactly the distributed answer. Arcs count between vertices
+    * of the vertex frame only (the distributed gather inner-joins dirty
+    * heads on dst and the merge left-joins from the state on src).
     */
-  private def hyperballLocal(arcs: DataFrame, vertices: DataFrame,
-                             lgK: Int, maxRounds: Int): (Seq[(Int, Double)], DataFrame) = {
+  private def hyperballLocal(g: LocalGraph, lgK: Int,
+                             maxRounds: Int): (Seq[(Int, Double)], DataFrame) = {
     import org.apache.spark.sql.graftx.RegHll
-    val spark = arcs.sparkSession
-    val vertIds = vertices.select("vid").distinct().collect().map(_.getLong(0))
-    val idx = new java.util.HashMap[java.lang.Long, Integer]()
-    vertIds.zipWithIndex.foreach { case (v, i) => idx.put(v, i) }
-    val n = vertIds.length
-    // arcs restricted to state vertices on BOTH ends (the distributed
-    // gather inner-joins dirty heads on dst and the merge left-joins
-    // from the state on src)
-    val arcRows = arcs.select("src", "dst").distinct().collect()
-    val ea = new scala.collection.mutable.ArrayBuffer[Int]()
-    val eb = new scala.collection.mutable.ArrayBuffer[Int]()
-    arcRows.foreach { r =>
-      val s = idx.get(java.lang.Long.valueOf(r.getLong(0)))
-      val d = idx.get(java.lang.Long.valueOf(r.getLong(1)))
-      if (s != null && d != null) { ea += s.intValue(); eb += d.intValue() }
-    }
+    val verts = g.vertexRows.distinct
+    val inV = g.mask(verts)
+    val out = g.csr(distinct = true, keep = (s, d) => inV(s) && inV(d))
     val m = RegHll.numRegisters(lgK)
-    val balls = Array.tabulate(n) { i =>
-      val regs = new Array[Byte](m)
-      RegHll.updateRegisters(regs,
-        org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(vertIds(i), RegHll.Seed), lgK)
-      regs
+    val balls = new Array[Array[Byte]](g.n)
+    val size = new Array[Double](g.n)
+    verts.foreach { v =>
+      balls(v) = new Array[Byte](m)
+      RegHll.updateRegisters(balls(v), org.apache.spark.sql.catalyst.expressions.XXH64
+        .hashLong(g.vids(v).asInstanceOf[Long], RegHll.Seed), lgK)
+      size(v) = RegHll.estimate(balls(v))
     }
-    val size = Array.tabulate(n)(i => RegHll.estimate(balls(i)))
-    val harm = new Array[Double](n)
-    val dirty = Array.fill(n)(true)
-    var nDirty = n.toLong
-    var curve = List(0 -> size.sum)
+    val harm = new Array[Double](g.n)
+    val dirty = inV.clone()
+    var nDirty = verts.length.toLong
+    def total = verts.iterator.map(size(_)).sum
+    var curve = List(0 -> total)
     var round = 0
     while (nDirty > 0 && round < maxRounds) {
-      // delta(v) = register-max over balls of DIRTY out-neighbors w
-      val delta = new Array[Array[Byte]](n)
-      var e = 0
-      while (e < ea.length) {
-        if (dirty(eb(e))) {
-          val v = ea(e)
-          if (delta(v) == null) delta(v) = new Array[Byte](m)
-          RegHll.maxInPlace(delta(v), balls(eb(e)))
-        }
-        e += 1
+      // delta(v) = register-max over balls of DIRTY out-neighbors w; all
+      // deltas are taken before any ball moves (synchronous rounds)
+      val delta = verts.map { v =>
+        val ws = out.dsts.slice(out.offsets(v), out.offsets(v + 1)).filter(dirty(_))
+        if (ws.isEmpty) null
+        else { val d = new Array[Byte](m); ws.foreach(w => RegHll.maxInPlace(d, balls(w))); d }
       }
       nDirty = 0
-      var v = 0
-      while (v < n) {
-        if (delta(v) != null) {
+      verts.indices.foreach { i =>
+        val v = verts(i)
+        if (delta(i) != null) {
           val nball = java.util.Arrays.copyOf(balls(v), m)
-          RegHll.maxInPlace(nball, delta(v))
+          RegHll.maxInPlace(nball, delta(i))
           val nd = !java.util.Arrays.equals(nball, balls(v))
           val nsize = if (nd) RegHll.estimate(nball) else size(v)
           harm(v) += math.max(nsize - size(v), 0.0) / (round + 1).toDouble
@@ -410,21 +325,12 @@ object Neighborhood {
           dirty(v) = nd
           if (nd) nDirty += 1
         } else dirty(v) = false
-        v += 1
       }
       round += 1
-      curve ::= (round -> size.sum)
+      curve ::= (round -> total)
     }
-    val rows = new java.util.ArrayList[org.apache.spark.sql.Row](n)
-    var i = 0
-    while (i < n) {
-      rows.add(org.apache.spark.sql.Row(vertIds(i), size(i), harm(i))); i += 1
-    }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("vid", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ball_size", org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("harm", org.apache.spark.sql.types.DoubleType)))
-    (curve.reverse, spark.createDataFrame(rows, schema).localCheckpoint(true))
+    (curve.reverse, g.frame("vid" -> verts, "ball_size" -> verts.map(size(_)),
+      "harm" -> verts.map(harm(_))).localCheckpoint(true))
   }
 
   /** Effective diameter at quantile q (default 0.9, Broder et al.'s

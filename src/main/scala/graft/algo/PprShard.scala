@@ -40,6 +40,45 @@ object PprShard {
     def nEdges: Long = dsts.length.toLong
   }
 
+  object LocalCsr {
+    /** Counting sort of (src, dst, weight) chunks by src. Stable: each
+      * neighbor list keeps the chunks' arc order.
+      */
+    def build(nV: Int, chunks: Array[(Array[Int], Array[Int], Array[Double])]): LocalCsr = {
+      val m = chunks.iterator.map(_._1.length.toLong).sum
+      require(m <= Int.MaxValue, s"CSR edge count $m exceeds local limit")
+      val deg = new Array[Int](nV)
+      chunks.foreach { case (ss, _, _) =>
+        var i = 0
+        while (i < ss.length) { deg(ss(i)) += 1; i += 1 }
+      }
+      val offsets = new Array[Int](nV + 1)
+      var i = 0
+      while (i < nV) { offsets(i + 1) = offsets(i) + deg(i); i += 1 }
+      val cursor = offsets.clone()
+      val dsts = new Array[Int](m.toInt)
+      val ws = new Array[Double](m.toInt)
+      chunks.foreach { case (ss, dd, ww) =>
+        var k = 0
+        while (k < ss.length) {
+          val c = cursor(ss(k))
+          dsts(c) = dd(k)
+          ws(c) = ww(k)
+          cursor(ss(k)) = c + 1
+          k += 1
+        }
+      }
+      val outW = new Array[Double](nV)
+      i = 0
+      while (i < nV) {
+        var e = offsets(i)
+        while (e < offsets(i + 1)) { outW(i) += ws(e); e += 1 }
+        i += 1
+      }
+      LocalCsr(nV, offsets, dsts, ws, outW)
+    }
+  }
+
   /** Destination-blocked edge layout: entries grouped by dst-block, src
     * ascending within a block (the natural order of a src-major sweep,
     * so construction is two O(E) passes, no sort). `wNorm` pre-folds the
@@ -80,37 +119,7 @@ object PprShard {
           }
           Iterator.single((s.result(), d.result(), w.result()))
         }.collect()
-    val m = chunks.iterator.map(_._1.length.toLong).sum
-    require(m <= Int.MaxValue, s"CSR edge count $m exceeds local limit")
-    val deg = new Array[Int](nV)
-    chunks.foreach { case (ss, _, _) =>
-      var i = 0
-      while (i < ss.length) { deg(ss(i)) += 1; i += 1 }
-    }
-    val offsets = new Array[Int](nV + 1)
-    var i = 0
-    while (i < nV) { offsets(i + 1) = offsets(i) + deg(i); i += 1 }
-    val cursor = offsets.clone()
-    val dsts = new Array[Int](m.toInt)
-    val ws = new Array[Double](m.toInt)
-    chunks.foreach { case (ss, dd, ww) =>
-      var k = 0
-      while (k < ss.length) {
-        val c = cursor(ss(k))
-        dsts(c) = dd(k)
-        ws(c) = ww(k)
-        cursor(ss(k)) = c + 1
-        k += 1
-      }
-    }
-    val outW = new Array[Double](nV)
-    i = 0
-    while (i < nV) {
-      var e = offsets(i)
-      while (e < offsets(i + 1)) { outW(i) += ws(e); e += 1 }
-      i += 1
-    }
-    LocalCsr(nV, offsets, dsts, ws, outW)
+    LocalCsr.build(nV, chunks)
   }
 
   /** Re-lay a CSR into destination blocks. `blockVerts` should be sized

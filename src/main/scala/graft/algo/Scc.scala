@@ -58,22 +58,21 @@ object Scc {
   /** @param arcs     directed (src, dst) — extra columns ignored
     * @param vertices (vid) full vertex set
     * @param pivotsPerClass SCCs retired per color class per outer round
-    * @param localFinishMax if |arcs| + |vertices| is at most this, solve
-    *        with ONE driver-side iterative Tarjan pass over collected
-    *        arrays instead of the trim/color/pivot fixpoint (the same
-    *        bounded-small-side gate as ConnectedComponents.localFinishMax
-    *        and Hits.localKernelMax: the distributed scheme is O(rounds)
-    *        driver barriers × O(E) exchanges — pure scheduling floor when
-    *        the graph fits in one task; at web scale the count stays
-    *        above any gate and the fixpoint loop runs). Identical output
-    *        (canonical min-member ids) — spec-pinned against the
-    *        distributed path. 0 disables the gate.
+    * @param localFinishMax row cap of the [[LocalGraph]] gate (0 disables
+    *        it): an admitted graph is solved by ONE driver-side iterative
+    *        Tarjan pass instead of the trim/color/pivot fixpoint, which is
+    *        O(rounds) driver barriers × O(E) exchanges — pure scheduling
+    *        floor when the graph fits in one task. Identical output
+    *        (canonical min-member ids), spec-pinned against the
+    *        distributed path.
     * @return (vid, scc) with scc = min vid of the strongly connected
     *         component (every vertex assigned; singletons map to
     *         themselves)
     */
   def run(arcs: DataFrame, vertices: DataFrame, maxOuter: Int = 50,
           pivotsPerClass: Int = 16, localFinishMax: Long = 1L << 20): DataFrame = {
+    if (LocalGraph.admit(localFinishMax, arcs, vertices).isDefined)
+      return runLocalTarjan(LocalGraph.collect(arcs, Some(vertices)))
     val spark = arcs.sparkSession
     // pin = materialize + truncate lineage + BOUNDED stats (the raw
     // localCheckpoint carries originStats whose sizeInBytes compounds
@@ -88,20 +87,6 @@ object Scc {
     var arcsBase = pin(arcs.select("src", "dst").distinct()
       .join(active.select(col("vid").as("src")), "src")
       .join(active.select(col("vid").as("dst")), "dst"))
-    // Gated driver Tarjan (vid types whose natural JVM order matches SQL
-    // least/min, so the canonical min-member id agrees with the
-    // distributed read-out — same restriction as CC's gate).
-    val vidType = active.schema("vid").dataType
-    val naturallyOrdered = vidType match {
-      case org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.StringType => true
-      case _ => false
-    }
-    if (localFinishMax > 0 && naturallyOrdered &&
-        nActive + arcsBase.count() <= localFinishMax) {
-      return runLocalTarjan(spark, arcsBase, active, vidType)
-    }
     val assigned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var outer = 0
     while (nActive > 0 && outer < maxOuter) {
@@ -245,30 +230,16 @@ object Scc {
   }
 
   /** The gated driver path: one iterative (explicit-stack) Tarjan pass
-    * over collected arrays — O(V+E), no recursion, no cluster barriers.
-    * Output ids are canonical min-member vids, identical to the
-    * distributed read-out.
+    * over the distinct arcs between vertices of the vertex frame — O(V+E),
+    * no recursion, no cluster barriers. The canonical id is the min dense
+    * id of each component, i.e. its SQL-min member vid.
     */
-  private def runLocalTarjan(spark: org.apache.spark.sql.SparkSession,
-                             arcs: DataFrame, vertices: DataFrame,
-                             vidType: org.apache.spark.sql.types.DataType): DataFrame = {
-    val vids = vertices.select("vid").collect().map(_.get(0))
-    val n = vids.length
-    val idx = new java.util.HashMap[Any, java.lang.Integer]()
-    vids.zipWithIndex.foreach { case (v, i) => idx.put(v, i) }
-    // CSR-ish adjacency from the collected arc rows (vertex-filtered
-    // upstream, so endpoints always resolve).
-    val arcRows = arcs.select("src", "dst").collect()
-    val deg = new Array[Int](n + 1)
-    arcRows.foreach(r => deg(idx.get(r.get(0)) + 1) += 1)
-    var i = 1
-    while (i <= n) { deg(i) += deg(i - 1); i += 1 }
-    val fill = deg.clone()
-    val adj = new Array[Int](arcRows.length)
-    arcRows.foreach { r =>
-      val s: Int = idx.get(r.get(0)); adj(fill(s)) = idx.get(r.get(1)); fill(s) += 1
-    }
-    // Iterative Tarjan.
+  private def runLocalTarjan(g: LocalGraph): DataFrame = {
+    val verts = g.vertexRows.distinct
+    val inV = g.mask(verts)
+    val csr = g.csr(distinct = true, keep = (s, d) => inV(s) && inV(d))
+    val (deg, adj) = (csr.offsets, csr.dsts)
+    val n = g.n
     val index = Array.fill(n)(-1)
     val low = new Array[Int](n)
     val onStack = new Array[Boolean](n)
@@ -278,8 +249,7 @@ object Scc {
     var nComp = 0
     val callV = new Array[Int](n) // explicit DFS frames: vertex + arc cursor
     val callE = new Array[Int](n)
-    var root = 0
-    while (root < n) {
+    verts.foreach { root =>
       if (index(root) == -1) {
         var top = 0
         callV(0) = root; callE(0) = deg(root)
@@ -307,29 +277,9 @@ object Scc {
           }
         }
       }
-      root += 1
     }
-    // Canonical id = min member vid per component (natural order — the
-    // gate admitted only long/int/string).
-    def less(x: Any, y: Any): Boolean = (x, y) match {
-      case (p: Long, q: Long)     => p < q
-      case (p: Int, q: Int)       => p < q
-      case (p: String, q: String) => p < q
-      case _ => throw new IllegalStateException("unreachable: gated above")
-    }
-    val minOf = new Array[Any](nComp)
-    var v = 0
-    while (v < n) {
-      val c = comp(v)
-      if (minOf(c) == null || less(vids(v), minOf(c))) minOf(c) = vids(v)
-      v += 1
-    }
-    val rows = new java.util.ArrayList[org.apache.spark.sql.Row](n)
-    v = 0
-    while (v < n) { rows.add(org.apache.spark.sql.Row(vids(v), minOf(comp(v)))); v += 1 }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("vid", vidType),
-      org.apache.spark.sql.types.StructField("scc", vidType)))
-    spark.createDataFrame(rows, schema)
+    val minOf = Array.fill(nComp)(Int.MaxValue)
+    verts.foreach(v => minOf(comp(v)) = math.min(minOf(comp(v)), v))
+    g.frame("vid" -> verts, "scc" -> verts.map(v => minOf(comp(v))))
   }
 }

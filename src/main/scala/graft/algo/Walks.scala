@@ -34,44 +34,27 @@ object Walks {
   /** @param arcs     directed (src, dst) — extra columns ignored, parallel
     *                  arcs collapse (distinct)
     * @param vertices (vid) walk starts — every vertex, walksPerVertex each
+    * @param localKernelMax row cap of the [[LocalGraph]] gate (0 disables it)
     * @return (start, walk, step, vid): position `step` ∈ [0, walkLen] of
     *         walk `walk` ∈ [0, walksPerVertex) started at `start`; walks
     *         from dead-end vertices end early
     */
   def randomWalks(arcs: DataFrame, vertices: DataFrame, walkLen: Int,
                   walksPerVertex: Int, seed: String = "w",
-                  batchRounds: Int = 4, localKernelMax: Long = 1L << 20,
-                  sizeHint: Long = -1L): DataFrame = {
+                  batchRounds: Int = 4, localKernelMax: Long = 1L << 20): DataFrame = {
     require(walkLen >= 0 && walksPerVertex >= 1)
     val spark = arcs.sparkSession
-    // Bounded driver kernel (the CC/HITS/Bfs gate pattern): the walkLen
-    // distributed steps are 2 joins + a checkpoint each — pure scheduling
-    // floor when the graph fits one task (measured 4.3 s / 46 jobs on a
-    // 31-vertex entity graph). The md5 step rule is integer-exact and the
-    // adjacency index order is replicated byte-for-byte (SQL UTF8 binary
-    // sort), so the paths are spec-pinned EXACTLY equal. At web scale the
-    // arc count stays above any gate and the distributed loop runs.
-    // `sizeHint` (|arcs| + |vertices| if the caller knows it) skips the
-    // probe scan, which is pure overhead where the gate can never fire.
-    if (localKernelMax > 0 &&
-        DriverGate.naturallyOrdered(vertices.schema("vid").dataType)) {
-      val outRowsCap = 1L << 21
-      if (sizeHint >= 0L) {
-        if (sizeHint <= localKernelMax) {
-          val pv = DriverGate.colProbe(vertices.select("vid"), "vid")
-          val pa = DriverGate.pairProbe(arcs.select("src", "dst"), "src", "dst")
-          if (boundedForLocal(pa, pv, localKernelMax, walkLen, walksPerVertex, outRowsCap))
-            return randomWalksLocal(arcs, vertices, walkLen, walksPerVertex, seed)
-        }
-      } else {
-        val pa = DriverGate.pairProbe(arcs.select("src", "dst"), "src", "dst")
-        if (pa.rows <= localKernelMax && pa.estBytes <= DriverGate.defaultMaxBytes) {
-          val pv = DriverGate.colProbe(vertices.select("vid"), "vid")
-          if (boundedForLocal(pa, pv, localKernelMax, walkLen, walksPerVertex, outRowsCap))
-            return randomWalksLocal(arcs, vertices, walkLen, walksPerVertex, seed)
-        }
-      }
-    }
+    // Driver kernel under the [[LocalGraph]] gate, plus an output bound of
+    // 2²¹ walk rows: the walkLen distributed steps are 2 joins + a
+    // checkpoint each — pure scheduling floor when the graph fits one task
+    // (measured 4.3 s / 46 jobs on a 31-vertex entity graph). The md5 step
+    // rule is integer-exact and dense ids sort like SQL, so both paths
+    // agree exactly.
+    val admitted = LocalGraph.admit(localKernelMax, arcs, vertices)
+      .exists(_._2.rows * walksPerVertex.toLong * (walkLen + 1L) <= (1L << 21))
+    if (admitted)
+      return randomWalksLocal(LocalGraph.collect(arcs, Some(vertices)), walkLen,
+        walksPerVertex, seed)
     def reRoot(df: DataFrame): DataFrame = spark.createDataFrame(df.rdd, df.schema)
 
     val adj0 = arcs.select("src", "dst").distinct()
@@ -126,74 +109,41 @@ object Walks {
     res
   }
 
-  private def boundedForLocal(pa: DriverGate.Probe, pv: DriverGate.Probe,
-                              localKernelMax: Long, walkLen: Int,
-                              walksPerVertex: Int, outRowsCap: Long): Boolean =
-    pa.rows <= localKernelMax && pa.estBytes <= DriverGate.defaultMaxBytes &&
-      pv.estBytes <= DriverGate.defaultMaxBytes &&
-      pv.rows * walksPerVertex.toLong * (walkLen + 1L) <= outRowsCap
-
-  /** The gated driver kernel: identical walks over a collected adjacency.
-    * Replicates the SQL step rule bit-for-bit — neighbor lists sorted in
-    * Spark's binary order ([[DriverGate.sqlOrdering]]), the pick index is
-    * the first 8 md5 hex digits of "seed|start|walk|t" (concat_ws renders
-    * long/int vids in decimal, exactly like String.valueOf) mod outdeg.
+  /** The gated driver kernel: the same walks over the distinct, SQL-sorted
+    * adjacency. The pick index is the first 8 md5 hex digits of
+    * "seed|start|walk|t" (concat_ws renders long/int vids in decimal,
+    * exactly like String.valueOf) mod outdeg. One walk set per input
+    * vertex row, like the distributed crossJoin.
     */
-  private def randomWalksLocal(arcs: DataFrame, vertices: DataFrame,
-                               walkLen: Int, walksPerVertex: Int,
+  private def randomWalksLocal(g: LocalGraph, walkLen: Int, walksPerVertex: Int,
                                seed: String): DataFrame = {
-    val spark = arcs.sparkSession
-    val ord = DriverGate.sqlOrdering(vertices.schema("vid").dataType)
-    // distinct like the distributed adj0; group dsts per src, sort by ord
-    val arcRows = arcs.select("src", "dst").distinct().collect()
-    val adj = new java.util.HashMap[Any, scala.collection.mutable.ArrayBuffer[Any]]()
-    arcRows.foreach { r =>
-      adj.computeIfAbsent(r.get(0), _ => scala.collection.mutable.ArrayBuffer.empty[Any])
-        .append(r.get(1))
-    }
-    adj.values().forEach(buf => { val s = buf.sortInPlace()(ord); () })
-    // one walk set per INPUT vertex row (the distributed crossJoin does
-    // not dedup starts — duplicate rows yield duplicate walks)
-    val starts = vertices.select("vid").collect().map(_.get(0))
+    val adj = g.csr(distinct = true)
     val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = "0123456789abcdef".toCharArray
-    def pick(start: Any, walk: Long, t: Int, deg: Int): Int = {
-      md.reset()
-      val s = seed + "|" + start.toString + "|" + walk + "|" + t
+    def pick(start: Int, walk: Long, t: Int, deg: Int): Int = {
+      val s = seed + "|" + g.vids(start).toString + "|" + walk + "|" + t
       val d = md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       // first 8 hex digits == first 4 bytes, as an unsigned 32-bit value
-      var h = 0L
-      var i = 0
-      while (i < 4) { h = (h << 8) | (d(i) & 0xFFL); i += 1 }
+      val h = (0 until 4).foldLeft(0L)((h, i) => (h << 8) | (d(i) & 0xFFL))
       (h % deg).toInt
     }
-    val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
-    starts.foreach { start =>
-      var w = 0L
-      while (w < walksPerVertex) {
-        var cur = start
-        rows.add(org.apache.spark.sql.Row(start, w, 0L, cur))
-        var t = 1
-        var dead = false
-        while (t <= walkLen && !dead) {
-          val nbrs = adj.get(cur)
-          if (nbrs == null) dead = true
-          else {
-            cur = nbrs(pick(start, w, t, nbrs.length))
-            rows.add(org.apache.spark.sql.Row(start, w, t.toLong, cur))
-          }
-          t += 1
-        }
-        w += 1
+    val (starts, walks, steps, at) = (Array.newBuilder[Int], Array.newBuilder[Long],
+      Array.newBuilder[Long], Array.newBuilder[Int])
+    def emit(start: Int, w: Long, t: Int, v: Int): Unit = {
+      starts += start; walks += w; steps += t.toLong; at += v
+    }
+    for (start <- g.vertexRows; w <- 0L until walksPerVertex.toLong) {
+      var cur = start
+      emit(start, w, 0, cur)
+      var t = 1
+      while (t <= walkLen && adj.offsets(cur + 1) > adj.offsets(cur)) {
+        val deg = adj.offsets(cur + 1) - adj.offsets(cur)
+        cur = adj.dsts(adj.offsets(cur) + pick(start, w, t, deg))
+        emit(start, w, t, cur)
+        t += 1
       }
     }
-    val vidType = vertices.schema("vid").dataType
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("start", vidType),
-      org.apache.spark.sql.types.StructField("walk", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("step", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("vid", vidType)))
-    spark.createDataFrame(rows, schema).localCheckpoint(true)
+    g.frame("start" -> starts.result(), "walk" -> walks.result(), "step" -> steps.result(),
+      "vid" -> at.result()).localCheckpoint(true)
   }
 
   /** Skip-gram (center, context) pair counts over a walk corpus — the

@@ -519,15 +519,20 @@ object DocQueries {
     // exactly once — the old collect-seeds + eager persist+count path was
     // two extra jobs and a leaked cache entry per call. Gate bound shared
     // with the Retriever (round-6 verdict #5: one constant, two readers).
-    val scores =
+    val (scores, runner) =
       if (nV <= graft.retrieve.Retriever.RetrieveConfig().csrMaxVertices) {
-        val csr = graft.algo.PprShard.buildLocal(arcs, nV.toInt)
-        new graft.algo.PprShard.Runner(s, csr)
-          .runFrameLazy(seeds, PprConfig(tol = 1e-10))
-      } else Ppr.run(s, arcs, nV, seeds, PprConfig(tol = 1e-10))._1
-    scores.join(dict, "vid")
+        val runner = new graft.algo.PprShard.Runner(s,
+          graft.algo.PprShard.buildLocal(arcs, nV.toInt))
+        (runner.runFrameLazy(seeds, PprConfig(tol = 1e-10)), Some(runner))
+      } else (Ppr.run(s, arcs, nV, seeds, PprConfig(tol = 1e-10))._1, None)
+    val out = scores.join(dict, "vid")
       .select(col("key"), round(col("score"), 9).as("score"))
       .orderBy(col("score").desc, col("key").asc)
+    // Materialize BEFORE releasing the broadcast CSR (the lazy plan
+    // computes through it), as qPagerankGlobal does.
+    val pinned = out.localCheckpoint(true)
+    runner.foreach(_.close())
+    pinned
   }
 
   /** G1 value-check at the driver: PPR as a FIXED 30-sweep power
@@ -548,17 +553,21 @@ object DocQueries {
     val (dict, nV) = entityDict(s, dir)
     val enc = Adjacency.encode(arcs, dict)
     val csr = graft.algo.PprShard.buildLocal(enc, nV.toInt)
-    // Seeds stay a FRAME into the lazy kernel: the old path collected the
-    // seed vid (a job) and ran the eagerly-materialized kernel (another
-    // job) before the readout recomputed nothing — q27c is one action now.
+    // Seeds stay a FRAME into the lazy kernel: no driver collect of the
+    // seed vid, and the checkpoint below computes the scores exactly once.
     val seeds = topDfEntityIds(s, dir, 1).join(dict, "key")
       .select(lit(0L).as("qid"), col("vid"), lit(1.0).as("weight"))
-    val scores = new graft.algo.PprShard.Runner(s, csr)
-      .runFrameLazy(seeds, PprConfig(damping = 0.5, tol = 0.0, maxIter = 30))
-    dict.join(scores.select("vid", "score"), Seq("vid"), "left")
+    val runner = new graft.algo.PprShard.Runner(s, csr)
+    val scores = runner.runFrameLazy(seeds,
+      PprConfig(damping = 0.5, tol = 0.0, maxIter = 30))
+    val out = dict.join(scores.select("vid", "score"), Seq("vid"), "left")
       .select(col("key").as("entity_id"),
         round(coalesce(col("score"), lit(0.0)), 9).as("score"))
       .orderBy("entity_id")
+    // Materialize before releasing the broadcast CSR (see qPagerankGlobal).
+    val pinned = out.localCheckpoint(true)
+    runner.close()
+    pinned
   }
 
   /** Global (uniform-reset) PageRank — the north rule's non-personalized

@@ -140,4 +140,32 @@ class GraphAlgoSpec extends SparkSpec {
     }
     assert(runWith("2") == runWith("16"))
   }
+
+  test("CC and triangle gates fall through on BinaryType vids; CC minimum is SQL's") {
+    // Binary vids have no driver dictionary (Array[Byte] equality is by
+    // reference), so the gated calls must take the distributed path.
+    val b = (0 to 2).map(i => Array[Byte](i.toByte))
+    val und = Seq((0, 1), (1, 2), (2, 0))
+      .flatMap { case (u, v) => Seq((b(u), b(v), 1.0), (b(v), b(u), 1.0)) }
+      .toDF("src", "dst", "weight")
+    val verts = b.toDF("vid")
+    def bytes(x: Any): Seq[Byte] = x.asInstanceOf[Array[Byte]].toSeq
+    for (gate <- Seq(1L << 20, 0L)) {
+      val (perVertex, total) = Triangles.run(und, verts, localKernelMax = gate)
+      val rows = perVertex.collect()
+      assert(total == 1L && rows.length == 3 && rows.forall(_.getLong(1) == 1L),
+        s"gate=$gate: total=$total rows=${rows.length}")
+      val cc = ConnectedComponents.run(und, verts, localFinishMax = gate)._1.collect()
+      assert(cc.length == 3 && cc.forall(r => bytes(r.get(1)) == bytes(b(0))), s"cc gate=$gate")
+    }
+    // Outside the Basic Multilingual Plane, UTF-16 order (java.lang.String)
+    // puts U+1F600 before U+FFFD; SQL's UTF-8 byte order puts it after.
+    val lo = "a\uFFFD"; val hi = "a\uD83D\uDE00"
+    val sArcs = Seq((lo, hi), (hi, lo)).toDF("src", "dst")
+    for (gate <- Seq(1L << 20, 0L)) {
+      val got = ConnectedComponents.run(sArcs, Seq(lo, hi).toDF("vid"), localFinishMax = gate)
+        ._1.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(got == Map(lo -> lo, hi -> lo), s"gate=$gate")
+    }
+  }
 }

@@ -650,4 +650,65 @@ class LinkAlgoSpec extends SparkSpec {
     assert(got == Set(("entity-a", "entity-b"), ("entity-a", "entity-c"),
       ("entity-x", "entity-y")))
   }
+
+  test("driver gates fall through on BinaryType vids (gated == distributed)") {
+    // A 3-vertex triangle on binary ids: the gated kernels must answer
+    // exactly like the distributed loops (coreness 2, equal HITS scores,
+    // 1 hop from the seed), not drop every arc on reference equality.
+    val b = (0 to 2).map(i => Array[Byte](i.toByte))
+    val und = Seq((0, 1), (1, 2), (2, 0))
+      .flatMap { case (u, v) => Seq((b(u), b(v), 1.0), (b(v), b(u), 1.0)) }
+      .toDF("src", "dst", "weight")
+    val verts = b.toDF("vid")
+    def byKey(df: org.apache.spark.sql.DataFrame): Map[Seq[Byte], Seq[Any]] =
+      df.collect().map(r => r.getAs[Array[Byte]](0).toSeq -> r.toSeq.drop(1).map {
+        case a: Array[Byte] => a.toSeq
+        case x => x
+      }).toMap
+    for (gate <- Seq(1L << 20, 0L)) {
+      val core = byKey(KCore.run(und, verts, localKernelMax = gate))
+      assert(core.values.toSet == Set(Seq(2L)) && core.size == 3, s"k-core gate=$gate: $core")
+      val hits = byKey(Hits.run(und, verts, sweeps = 5, localKernelMax = gate))
+      assert(hits.size == 3 && hits.values.forall(_.forall(h =>
+        math.abs(h.asInstanceOf[Double] - 1.0 / math.sqrt(3.0)) < 1e-12)), s"hits gate=$gate: $hits")
+      val hops = byKey(Bfs.hops(und, verts, Seq(b(0)).toDF("vid"), localKernelMax = gate))
+      assert(hops == Map(b(0).toSeq -> Seq(0L), b(1).toSeq -> Seq(1L), b(2).toSeq -> Seq(1L)),
+        s"bfs gate=$gate: $hops")
+      val scc = byKey(Scc.run(und, verts, localFinishMax = gate))
+      assert(scc.values.toSet == Set(Seq(b(0).toSeq)) && scc.size == 3, s"scc gate=$gate")
+      val lpa = byKey(LabelProp.run(und, verts, maxIter = 10, localKernelMax = gate)._1)
+      assert(lpa.size == 3, s"lpa gate=$gate")
+      val dist = Neighborhood.exactDistances(und, verts, localKernelMax = gate).count()
+      assert(dist == 9L, s"exact distances gate=$gate")
+    }
+  }
+
+  test("SCC minimum is SQL's UTF-8 order outside the Basic Multilingual Plane (both paths)") {
+    // java.lang.String order puts U+1F600 (a surrogate pair) before
+    // U+FFFD; Spark's UTF-8 byte order, and so the distributed min, after.
+    val lo = "a\uFFFD"; val hi = "a\uD83D\uDE00"
+    val arcs = Seq((lo, hi), (hi, lo)).toDF("src", "dst")
+    for (gate <- Seq(1L << 20, 0L)) {
+      val got = Scc.run(arcs, Seq(lo, hi).toDF("vid"), localFinishMax = gate)
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(got == Map(lo -> lo, hi -> lo), s"gate=$gate")
+    }
+  }
+
+  test("LPA with fractional weights: gated == distributed (integer-weight gate)") {
+    // Per target t: three parallel arcs from s1 = 3t+1 whose weights sum
+    // to 0.6 or 0.6000000000000001 depending on summation order, against
+    // one 0.6 arc from s0 = 3t. A driver sum in a different order than the
+    // distributed partial aggregation flips the tie-break, so fractional
+    // weights must take the distributed path.
+    val perms = Seq(0.1, 0.2, 0.3).permutations.toSeq
+    val arcs = (0 until 24).flatMap { t =>
+      val (s0, s1, d) = (3L * t, 3L * t + 1, 3L * t + 2)
+      (s0, d, 0.6) +: perms(t % perms.length).map(w => (s1, d, w))
+    }.toDF("src", "dst", "weight").repartition(3)
+    val verts = (0L until 72L).toDF("vid")
+    def run(gate: Long) = LabelProp.run(arcs, verts, maxIter = 5, localKernelMax = gate)._1
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(run(1L << 20) == run(0L))
+  }
 }
