@@ -21,8 +21,8 @@ import org.apache.spark.sql.functions._
   * Master/executors/memory come from spark-submit (no .master() call
   * here); standalone runs fall back to local[*]. `ppr`/`cc` accept an
   * optional checkpoint dir and RESUME from it mid-convergence
-  * ([[graft.algo.PprCheckpoint]]/[[graft.algo.CcCheckpoint]]) — rerunning
-  * the same command after a driver kill continues instead of restarting.
+  * ([[graft.algo.Fixpoint.Checkpoint]]) — rerunning the same command
+  * after a driver kill continues instead of restarting.
   */
 object Jobs {
 

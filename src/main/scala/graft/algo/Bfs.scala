@@ -16,8 +16,9 @@ import org.apache.spark.storage.StorageLevel
   * frontier-reached vertex set only (not all V), so early rounds shuffle
   * O(|reached|), not O(V). Converges in `diameter(reached region)`
   * rounds — web graphs are small-diameter, and the round bound is
-  * explicit (`maxRounds`). Lineage truncated every `checkpointEvery`
-  * rounds like the other iterative jobs.
+  * explicit (`maxRounds`). The loop ([[relax]], shared with
+  * [[Neighborhood.exactDistances]]) follows [[Fixpoint]]: the settled set
+  * is truncated every `checkpointEvery` rounds.
   */
 object Bfs {
 
@@ -35,53 +36,58 @@ object Bfs {
   def hops(arcs: DataFrame, vertices: DataFrame, seeds: DataFrame,
            maxRounds: Int = 64, checkpointEvery: Int = 5,
            localKernelMax: Long = 1L << 20): DataFrame = {
-    val spark = arcs.sparkSession
     if (LocalGraph.admit(localKernelMax, arcs, seeds).isDefined)
       return hopsLocal(LocalGraph.collect(arcs, Some(seeds)), vertices, maxRounds)
-    def reRoot(df: DataFrame): DataFrame = spark.createDataFrame(df.rdd, df.schema)
     val a0 = arcs.select("src", "dst").persist(StorageLevel.MEMORY_AND_DISK)
+    val out = relax(a0, seeds.select(col("vid")).distinct().select(col("vid"), lit(0L).as("hops")),
+        Nil, maxRounds, checkpointEvery) { settled =>
+      vertices.select("vid")
+        .join(settled, Seq("vid"), "left")
+        .select(col("vid"), col("hops"))
+        .localCheckpoint(true)
+    }
+    a0.unpersist(false)
+    out
+  }
 
-    var reached = seeds.select(col("vid")).distinct()
-      .select(col("vid"), lit(0L).as("hops"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var reachedLeaf = reRoot(reached)
-    var frontier = reached // rows whose hops value is new this round
-    var frontierLeaf = reachedLeaf
+  /** Synchronous frontier relaxation to exhaustion (or `maxRounds`), per
+    * key: starting from the hop-0 rows `init` (keys…, vid, hops), each
+    * round moves one hop along `arcs` (src, dst) from the rows settled
+    * last round only — an unweighted distance never improves once
+    * settled, so a round's join is O(frontier arcs), not O(reached arcs).
+    * [[hops]] runs it with no key, [[Neighborhood.exactDistances]] keyed by
+    * root. `readOut` pins its result from the settled (keys…, vid, hops)
+    * rows before the loop state is released.
+    */
+  private[algo] def relax(arcs: DataFrame, init: DataFrame, keys: Seq[String],
+                          maxRounds: Int, checkpointEvery: Int)
+                         (readOut: DataFrame => DataFrame): DataFrame = {
+    val lineage = new Fixpoint.Lineage(checkpointEvery)
+    var settled = Fixpoint.leaf(lineage.hold(init.persist(StorageLevel.MEMORY_AND_DISK)))
+    var frontier = settled
+    var fresh: Option[DataFrame] = None // the persisted frontier, after round 1
     var round = 0
     var grew = true
     while (grew && round < maxRounds) {
-      // Only the FRONTIER gathers: a settled vertex relaxes nothing new
-      // (unweighted hops never improve once assigned), so each round's
-      // join is O(frontier arcs), not O(reached arcs).
-      val cand = a0.join(frontierLeaf.withColumnRenamed("vid", "src"), "src")
-        .groupBy(col("dst").as("vid")).agg(min(col("hops") + 1L).as("hops"))
-      val fresh = cand.join(reachedLeaf.select("vid"), Seq("vid"), "left_anti")
+      val cand = arcs.join(frontier.withColumnRenamed("vid", "src"), "src")
+        .groupBy(keys.map(col) :+ col("dst").as("vid"): _*)
+        .agg(min(col("hops") + 1L).as("hops"))
+      val next = cand.join(settled.select((keys :+ "vid").map(col): _*), keys :+ "vid", "left_anti")
         .persist(StorageLevel.MEMORY_AND_DISK)
-      grew = fresh.count() > 0L
+      grew = next.count() > 0L
       if (grew) {
-        val merged = reachedLeaf.unionByName(reRoot(fresh))
-        val next =
-          if ((round + 1) % checkpointEvery == 0) merged.localCheckpoint(true)
-          else merged.persist(StorageLevel.MEMORY_AND_DISK)
-        next.count() // materialize before releasing parents
-        reached.unpersist(false)
-        if (frontier ne reached) frontier.unpersist(false)
-        reached = next
-        reachedLeaf = reRoot(reached)
-        frontier = fresh
-        frontierLeaf = reRoot(fresh)
-      } else {
-        fresh.unpersist(false)
-      }
+        val nextLeaf = Fixpoint.leaf(next)
+        val (state, _) = lineage.round(round + 1, settled.unionByName(nextLeaf))(_.count())
+        fresh.foreach(_.unpersist(false))
+        fresh = Some(next)
+        settled = Fixpoint.leaf(state)
+        frontier = nextLeaf
+      } else next.unpersist(false)
       round += 1
     }
-    val out = vertices.select("vid")
-      .join(reachedLeaf, Seq("vid"), "left")
-      .select(col("vid"), col("hops"))
-      .localCheckpoint(true)
-    reached.unpersist(false)
-    if (frontier ne reached) frontier.unpersist(false)
-    a0.unpersist(false)
+    val out = readOut(settled)
+    lineage.release()
+    fresh.foreach(_.unpersist(false))
     out
   }
 

@@ -20,7 +20,8 @@ import org.apache.spark.storage.StorageLevel
   *    one groupBy(min) per round, O(diameter) rounds. Cheaper per round;
   *    fine for small-diameter web graphs, kept for cross-checks.
   *
-  * Lineage is truncated every `checkpointEvery` rounds in both.
+  * Both loops follow [[Fixpoint]]: the state is truncated every
+  * `checkpointEvery` rounds.
   */
 object ConnectedComponents {
 
@@ -93,8 +94,10 @@ object ConnectedComponents {
     *        times O(log V) rounds — pure driver-barrier floor when the
     *        remainder fits in one task. The gate's probe is the one the
     *        loop needs anyway.
-    * @param checkpointDir durable-resume directory ([[CcCheckpoint]]):
-    *        when set, the contracted pair set is persisted to disk every
+    * @param checkpointDir durable-resume directory ([[Fixpoint.Checkpoint]]
+    *        holding the pair set plus one metadata row: iter, n_pairs,
+    *        checksum, elapsed_sec): when set, the contracted pair set is
+    *        persisted to disk every
     *        `diskCheckpointEvery` rounds, and a run over a dir holding a
     *        committed checkpoint RESUMES from it (skipping input rebuild
     *        and pre-contraction — the stored pair set IS the loop state).
@@ -113,21 +116,16 @@ object ConnectedComponents {
           diskCheckpointEvery: Int = 10): (DataFrame, Int) = {
     val spark = arcs.sparkSession
     val t0 = System.nanoTime()
-    // Re-root a persisted frame as a LogicalRDD leaf: each star round
-    // references the previous edge set FOUR times (sym union ×2, then
-    // join + min ×2), so chaining plans would grow the logical tree 4^k
-    // across rounds — analysis time alone hangs the loop long before
-    // compute does (measured round-2 pitfall; same fix as Ppr's DF path).
-    // The leaf's RDD is the persisted one, so the cache still serves it.
-    def reRoot(df: DataFrame): DataFrame = spark.createDataFrame(df.rdd, df.schema)
 
     // Unordered simple pairs (a < b) — the star edge set. `cur` is the
-    // persisted handle (for unpersist); `edges` its leaf view. A committed
-    // durable checkpoint replaces the whole construction: the stored pair
-    // set is already contracted/canonicalized.
-    val restored = checkpointDir.flatMap(d => CcCheckpoint.readLatest(spark, d))
-    var cur = restored match {
-      case Some(st) => st.pairs.persist(StorageLevel.MEMORY_AND_DISK)
+    // persisted state; `edges` its leaf view (each star round references
+    // the previous edge set FOUR times — sym union ×2, then join + min ×2
+    // — so a chained plan would grow 4^k). A committed durable checkpoint
+    // replaces the whole construction: the stored pair set is already
+    // contracted/canonicalized.
+    val restored = checkpointDir.flatMap(d => Fixpoint.Checkpoint.readLatest(spark, d))
+    val cur = restored match {
+      case Some(st) => st.state.persist(StorageLevel.MEMORY_AND_DISK)
       case None =>
         val raw0 = arcs.select(col("src").as("u"), col("dst").as("v"))
           .where(col("u") =!= col("v"))
@@ -168,7 +166,8 @@ object ConnectedComponents {
       return (pinned, 0)
     }
     var lastChecksum = p0.checksum
-    var edges = reRoot(cur)
+    val lineage = new Fixpoint.Lineage(checkpointEvery)
+    var edges = Fixpoint.leaf(lineage.hold(cur))
     var iter = restored.map(_.iter).getOrElse(0)
     var converged = nEdges == 0L
     while (!converged && iter < maxIter) {
@@ -191,13 +190,12 @@ object ConnectedComponents {
       // smaller neighbors (plus b itself) all link to m(b) = min
       // neighbor (every neighbor is < b, so the min neighbor is m).
       val mSmall = afterLarge.groupBy("b").agg(min("a").as("m"))
-      val next0 = afterLarge.join(mSmall, "b")
+      val next = afterLarge.join(mSmall, "b")
         .select(col("a").as("x"), col("m").as("y"))
         .unionAll(mSmall.select(col("b").as("x"), col("m").as("y")))
         .where(col("x") =!= col("y"))
         .select(least(col("x"), col("y")).as("a"), greatest(col("x"), col("y")).as("b"))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
       // Fixpoint iff the edge sets are equal. The cheap probe — size +
       // order-insensitive content checksum, ONE aggregate on the frame
       // being materialized anyway — almost never matches before the
@@ -205,28 +203,26 @@ object ConnectedComponents {
       // shuffle + barrier per round) runs only when the probe says
       // "likely converged": exactness is preserved, the per-round cost is
       // one action.
-      val probe = next0.agg(count(lit(1)), expr("bit_xor(xxhash64(a, b))")).first()
-      val nNext = probe.getLong(0)
-      val ckNext = if (probe.isNullAt(1)) 0L else probe.getLong(1)
-      val ckPrev = lastChecksum
-      lastChecksum = ckNext
-      converged = nNext == nEdges && ckNext == ckPrev &&
-        next0.except(edges).isEmpty
+      val (state, (nNext, ckNext, same)) = lineage.round(iter + 1, next) { st =>
+        val probe = st.agg(count(lit(1)), expr("bit_xor(xxhash64(a, b))")).first()
+        val n = probe.getLong(0)
+        val ck = if (probe.isNullAt(1)) 0L else probe.getLong(1)
+        (n, ck, n == nEdges && ck == lastChecksum && st.except(edges).isEmpty)
+      }
       afterLarge.unpersist(false)
-      cur.unpersist(false)
-      // Truncate the cached RDD's own lineage periodically (a lost cache
-      // partition would otherwise recompute through every prior round).
-      cur = if ((iter + 1) % checkpointEvery == 0) {
-        val c = next0.localCheckpoint(true); next0.unpersist(false); c
-      } else next0
-      edges = reRoot(cur)
+      converged = same
+      lastChecksum = ckNext
+      edges = Fixpoint.leaf(state)
       nEdges = nNext
       iter += 1
-      // Durable checkpoint (CcCheckpoint): written AFTER the round's state
-      // is pinned, so a kill mid-round resumes from the previous commit.
-      if (!converged && checkpointDir.isDefined && iter % diskCheckpointEvery == 0)
-        CcCheckpoint.write(spark, checkpointDir.get, cur, iter, nEdges,
-          lastChecksum, (System.nanoTime() - t0) / 1e9)
+      // Durable checkpoint: written AFTER the round's state is
+      // materialized, so a kill mid-round resumes from the previous commit.
+      if (!converged && checkpointDir.isDefined && Fixpoint.due(iter, diskCheckpointEvery)) {
+        import spark.implicits._
+        Fixpoint.Checkpoint.write(checkpointDir.get, iter, state,
+          Seq((iter, nEdges, lastChecksum, (System.nanoTime() - t0) / 1e9))
+            .toDF("iter", "n_pairs", "checksum", "elapsed_sec"))
+      }
     }
     // At the fixpoint every pair is (root = component min, member). The
     // read-out still groupBy-mins per vertex: mid-contraction (maxIter
@@ -239,10 +235,10 @@ object ConnectedComponents {
       .join(roots, Seq("vid"), "left")
       .select(col("vid"), coalesce(col("root"), col("vid")).as("component"))
     // Pin the O(V) labels and release the O(E) pair-set cache — callers
-    // can't reach `cur`, so returning a frame that depends on it would
-    // leak one cached edge set per CC invocation.
+    // can't reach the loop state, so returning a frame that depends on it
+    // would leak one cached edge set per CC invocation.
     val pinned = labels.localCheckpoint(true)
-    cur.unpersist(false)
+    lineage.release()
     (pinned, iter)
   }
 
@@ -253,31 +249,27 @@ object ConnectedComponents {
   def runMinLabel(arcs: DataFrame, vertices: DataFrame, checkpointEvery: Int = 5,
                   maxIter: Int = 200): (DataFrame, Int) = {
     val edges = arcs.select("src", "dst").persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = vertices.select(col("vid"), col("vid").as("component"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val lineage = new Fixpoint.Lineage(checkpointEvery)
+    var labels = lineage.hold(vertices.select(col("vid"), col("vid").as("component"))
+      .persist(StorageLevel.MEMORY_AND_DISK))
     var iter = 0
     var changed = 1L
     while (changed > 0 && iter < maxIter) {
       val incoming = labels.join(edges, labels("vid") === edges("src"))
         .groupBy(col("dst").as("vid"))
         .agg(min("component").as("nbr_min"))
-      val next0 = labels.join(incoming, Seq("vid"), "left")
+      val next = labels.join(incoming, Seq("vid"), "left")
         .select(col("vid"),
           least(col("component"), coalesce(col("nbr_min"), col("component"))).as("component"),
           (col("nbr_min") < col("component")).as("chg"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val next =
-        if ((iter + 1) % checkpointEvery == 0) {
-          val c = next0.localCheckpoint(true); next0.unpersist(false); c
-        } else next0
-      changed = next.where(col("chg")).count()
-      labels.unpersist(false)
-      labels = next
+      val (state, chg) = lineage.round(iter + 1, next)(_.where(col("chg")).count())
+      labels = state
+      changed = chg
       iter += 1
     }
     edges.unpersist(false)
     val pinned = labels.select("vid", "component").localCheckpoint(true)
-    labels.unpersist(false)
+    lineage.release()
     (pinned, iter)
   }
 }

@@ -22,11 +22,11 @@ import org.apache.spark.storage.StorageLevel
   *
   * Scale shape: each half-step is one shuffle join on the arc table plus
   * a map-side-combinable groupBy; the norm is a broadcast one-row
-  * crossJoin, NOT a driver action — the whole run executes as one Spark
-  * job per `checkpointEvery` sweeps (2·sweeps driver round-trips made a
-  * tiny-graph run take 24 s of pure scheduling; same action-count
-  * discipline as the PPR kernels). State is O(V); Zipf hubs cost partial
-  * aggregation, not a hot reducer.
+  * crossJoin, NOT a driver action — sweeps are lazy [[Fixpoint]] rounds,
+  * so the whole run executes as one Spark job per `checkpointEvery`
+  * sweeps (2·sweeps driver round-trips made a tiny-graph run take 24 s of
+  * pure scheduling; same action-count discipline as the PPR kernels).
+  * State is O(V); Zipf hubs cost partial aggregation, not a hot reducer.
   */
 object Hits {
 
@@ -46,15 +46,8 @@ object Hits {
     // sweeps = 0 would leave `auth` unbound (NPE at the final join) and has
     // no meaning anyway: HITS without a power step is just the init vector.
     require(sweeps >= 1, s"HITS needs at least one sweep (got $sweeps)")
-    val spark = arcs.sparkSession
     if (LocalGraph.admit(localKernelMax, arcs, vertices).isDefined)
       return runLocal(LocalGraph.collect(arcs, Some(vertices), weighted = true), sweeps)
-    // LAZY re-root: normalized() references its input twice (norm branch
-    // + value branch) — without collapsing each half-step to a LogicalRDD
-    // leaf the logical plan would grow 4^sweeps. The leaf's RDD lineage
-    // is a DAG (shared node), its shuffle dependencies materialize once,
-    // and no action runs here.
-    def reRoot(df: DataFrame): DataFrame = spark.createDataFrame(df.rdd, df.schema)
     val a0 = arcs.select(col("src"), col("dst"), col("weight").cast("double").as("weight"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     // distinct: the gated kernel deduplicates vids, and WITHOUT it here a
@@ -85,24 +78,24 @@ object Hits {
           (col(c) / when(col("_n") === 0.0, lit(1.0)).otherwise(col("_n"))).as(c))
     }
 
+    // normalized() references its input twice (norm branch + value
+    // branch), so every half-step is re-leafed: a chained plan would grow
+    // 4^sweeps. The leaf's RDD lineage is a DAG (shared node) whose
+    // shuffle dependencies materialize once.
     var hub = verts.select(col("vid"), lit(1.0).as("h")).localCheckpoint(true)
     var auth: DataFrame = null
-    var authPinned = false
     var it = 0
     while (it < sweeps) {
-      val aN = reRoot(normalized(reRoot(gather(hub, "src", "a")), "a"))
-      val hN = normalized(reRoot(gather(aN, "dst", "h")), "h")
-      // Evaluation happens only at checkpoints: each checkpoint runs the
-      // (up to `checkpointEvery`) sweeps since the previous one as ONE
-      // job — the inter-sweep DAG is a linear join chain, no fan-out, so
-      // nothing recomputes exponentially. auth is pinned WITH its hub
-      // (same underlying sweep) only at the end.
-      if ((it + 1) % checkpointEvery == 0 || it + 1 == sweeps) {
-        hub = hN.localCheckpoint(true)
-        if (it + 1 == sweeps) { auth = aN.localCheckpoint(true); authPinned = true }
-      } else hub = hN
-      if (!authPinned) auth = aN
       it += 1
+      val last = it == sweeps
+      val aN = Fixpoint.leaf(normalized(Fixpoint.leaf(gather(hub, "src", "a")), "a"))
+      // A pin runs the (up to `checkpointEvery`) sweeps since the previous
+      // one as ONE job — the inter-sweep DAG is a linear join chain, no
+      // fan-out, so nothing recomputes exponentially. auth is pinned WITH
+      // its hub (same underlying sweep) only at the end.
+      hub = Fixpoint.lazyRound(it, checkpointEvery,
+        normalized(Fixpoint.leaf(gather(aN, "dst", "h")), "h"), last)
+      auth = if (last) Fixpoint.pin(aN) else aN
     }
     val out = hub.join(auth, "vid")
       .select(col("vid"), col("h").as("hub"), col("a").as("authority"))

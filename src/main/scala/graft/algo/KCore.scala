@@ -30,8 +30,8 @@ import org.apache.spark.storage.StorageLevel
   * is O(frontier arcs), not O(E); termination (zero dirty) is the exact
   * fixpoint, with no separate change-detector join. Loop mechanics
   * follow the HyperBall discipline: arcs persisted pre-hashed on BOTH
-  * keys, state kept hash(vid) via partitioning-preserving
-  * localCheckpoint, three frontier-sized exchanges per round (affected
+  * keys, state kept hash(vid) by a [[Fixpoint]] pin every round, three
+  * frontier-sized exchanges per round (affected
   * ids, value gather by dst, h-index window by src), one action per
   * round carrying the dirty count.
   *
@@ -135,13 +135,7 @@ object KCore {
     // c₀ = degree (bySrc is already hash(src): groupBy reuses it), zero
     // for isolated vertices; everyone starts dirty.
     val degrees = bySrc.groupBy(col("src").as("vid")).agg(count(lit(1)).as("c"))
-    // ckpt = materialize + keep partitioning + BOUNDED stats: the raw
-    // localCheckpoint carries originStats whose sizeInBytes COMPOUNDS
-    // through round-over-round joins (see PlanUtils.dropOriginStats —
-    // a ~20-round loop drove the driver into million-digit BigInt math).
-    def ckpt(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graftx.PlanUtils.dropOriginStats(df.localCheckpoint(true))
-    var state = ckpt(vertices.select("vid").distinct()
+    var state = Fixpoint.pin(vertices.select("vid").distinct()
       .join(degrees, Seq("vid"), "left")
       .select(col("vid"), coalesce(col("c"), lit(0L)).as("c"), lit(true).as("dirty"))
       .repartition(nPart, col("vid")))
@@ -173,15 +167,12 @@ object KCore {
           when(col("nc").isNotNull, least(col("c"), col("nc")))
             .otherwise(col("c")).as("c"),
           (col("nc").isNotNull && col("nc") < col("c")).as("dirty"))
-      val next = ckpt(merged) // keeps hash(vid, nPart)
-      nDirty = dirtyCount(next)
-      state.unpersist(false)
-      state = next
+      state = Fixpoint.pin(merged) // keeps hash(vid, nPart)
+      nDirty = dirtyCount(state)
       round += 1
       if (verbose) System.err.println(s"[kcore] round $round dirty=$nDirty")
     }
     val out = state.select(col("vid"), col("c").as("coreness")).localCheckpoint(true)
-    state.unpersist(false)
     bySrc.unpersist(false); byDst.unpersist(false)
     (out, round, nDirty == 0L)
   }

@@ -15,7 +15,8 @@ import org.apache.spark.storage.StorageLevel
   *
   * The reference ships igraph whose async LPA is seed-dependent and
   * untestable; this synchronous min-tie-break variant is the documented,
-  * oracle-able replacement (FIXTURES.md §4 lpa_smoke).
+  * oracle-able replacement (FIXTURES.md §4 lpa_smoke). The distributed
+  * rounds follow [[Fixpoint]]: persisted, truncated every `checkpointEvery`.
   */
 object LabelProp {
 
@@ -85,8 +86,9 @@ object LabelProp {
     val proj = arcs.select("src", "dst", "weight")
     val ownsCache = proj.storageLevel == StorageLevel.NONE
     val edges = if (ownsCache) proj.persist(StorageLevel.MEMORY_AND_DISK) else proj
-    var labels = vertices.select(col("vid"), col("vid").as("label"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val lineage = new Fixpoint.Lineage(checkpointEvery)
+    var labels = lineage.hold(vertices.select(col("vid"), col("vid").as("label"))
+      .persist(StorageLevel.MEMORY_AND_DISK))
     var iter = 0
     var changed = 1L
     while (changed > 0 && iter < maxIter) {
@@ -97,18 +99,13 @@ object LabelProp {
       val winners = votes.withColumn("rn", row_number().over(w))
         .where(col("rn") === 1)
         .select(col("vid"), col("label").as("new_label"))
-      val next0 = labels.join(winners, Seq("vid"), "left")
+      val next = labels.join(winners, Seq("vid"), "left")
         .select(col("vid"),
           coalesce(col("new_label"), col("label")).as("label"),
           (coalesce(col("new_label"), col("label")) =!= col("label")).as("chg"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val next =
-        if ((iter + 1) % checkpointEvery == 0) {
-          val c = next0.localCheckpoint(true); next0.unpersist(false); c
-        } else next0
-      changed = next.where(col("chg")).count()
-      labels.unpersist(false)
-      labels = next
+      val (state, chg) = lineage.round(iter + 1, next)(_.where(col("chg")).count())
+      labels = state
+      changed = chg
       iter += 1
     }
     if (ownsCache) edges.unpersist(false)

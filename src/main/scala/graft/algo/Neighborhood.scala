@@ -32,10 +32,7 @@ import graft.functions.SketchOps
   *    allocation was measured to anti-scale on the merge-heavy path),
   *    no UDFs.
   *
-  * Both follow the repo's iterative-loop discipline: LogicalRDD re-root
-  * per round (chained plans grow exponentially in Catalyst), persist +
-  * explicit unpersist of the previous round, localCheckpoint lineage
-  * truncation.
+  * Both follow the [[Fixpoint]] loop discipline.
   */
 object Neighborhood {
 
@@ -61,7 +58,6 @@ object Neighborhood {
   def exactDistances(arcs: DataFrame, vertices: DataFrame,
                      maxRounds: Int = 64, checkpointEvery: Int = 5,
                      localKernelMax: Long = 1L << 20): DataFrame = {
-    val spark = arcs.sparkSession
     // Driver all-roots BFS under the [[LocalGraph]] gate. The result is
     // O(roots·reach) (root, vid, hops) rows, each carrying two vid payloads
     // like an arc row, so the gate also bounds the output: roots ×
@@ -75,46 +71,10 @@ object Neighborhood {
         outRows <= (1L << 21) && outRows * perRowB <= 2L * DriverGate.defaultMaxBytes
     }
     if (admitted) return exactDistancesLocal(LocalGraph.collect(arcs, Some(vertices)), maxRounds)
-    def reRoot(df: DataFrame): DataFrame = spark.createDataFrame(df.rdd, df.schema)
+    // Bfs.hops' frontier relaxation, keyed by root.
     val a0 = arcs.select("src", "dst").distinct().persist(StorageLevel.MEMORY_AND_DISK)
-
-    // state: settled (root, vid, hops); frontier: rows new this round.
-    var state = vertices.select(col("vid").as("root"), col("vid"), lit(0L).as("hops"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var stateLeaf = reRoot(state)
-    var frontier = state
-    var frontierLeaf = stateLeaf
-    var round = 0
-    var grew = true
-    while (grew && round < maxRounds) {
-      // Frontier-only relaxation (same argument as Bfs.hops: an
-      // unweighted distance never improves once settled), keyed by root.
-      val cand = a0.join(frontierLeaf.withColumnRenamed("vid", "src"), "src")
-        .groupBy(col("root"), col("dst").as("vid"))
-        .agg(min(col("hops") + 1L).as("hops"))
-      val fresh = cand.join(stateLeaf.select("root", "vid"), Seq("root", "vid"), "left_anti")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      grew = fresh.count() > 0L
-      if (grew) {
-        val merged = stateLeaf.unionByName(reRoot(fresh))
-        val next =
-          if ((round + 1) % checkpointEvery == 0) merged.localCheckpoint(true)
-          else merged.persist(StorageLevel.MEMORY_AND_DISK)
-        next.count()
-        state.unpersist(false)
-        if (frontier ne state) frontier.unpersist(false)
-        state = next
-        stateLeaf = reRoot(state)
-        frontier = fresh
-        frontierLeaf = reRoot(fresh)
-      } else {
-        fresh.unpersist(false)
-      }
-      round += 1
-    }
-    val out = stateLeaf.localCheckpoint(true)
-    state.unpersist(false)
-    if (frontier ne state) frontier.unpersist(false)
+    val out = Bfs.relax(a0, vertices.select(col("vid").as("root"), col("vid"), lit(0L).as("hops")),
+      Seq("root"), maxRounds, checkpointEvery)(_.localCheckpoint(true))
     a0.unpersist(false)
     out
   }
@@ -210,19 +170,14 @@ object Neighborhood {
         ps._2.rows * org.apache.spark.sql.graftx.RegHll.numRegisters(lgK).toLong <= (1L << 28))
     if (admitted) return hyperballLocal(LocalGraph.collect(arcs, Some(vertices)), lgK, maxRounds)
     val nPart = spark.sessionState.conf.numShufflePartitions
-    // ckpt = materialize + keep partitioning + BOUNDED stats (raw
-    // localCheckpoint carries originStats whose sizeInBytes compounds
-    // through round-over-round joins; see PlanUtils.dropOriginStats).
-    def ckpt(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graftx.PlanUtils.dropOriginStats(df.localCheckpoint(true))
     // Pre-hash arcs by dst: every round's gather join then lines up with
     // the vid-hashed state without a new exchange.
     val a0 = arcs.select("src", "dst").distinct()
       .repartition(nPart, col("dst")).persist(StorageLevel.MEMORY_AND_DISK)
 
-    // groupBy(vid) leaves the state hash(vid, nPart); localCheckpoint
-    // materializes it WITH that partitioning.
-    var state = ckpt(vertices.select("vid").distinct()
+    // groupBy(vid) leaves the state hash(vid, nPart); a pin materializes
+    // it WITH that partitioning, every round.
+    var state = Fixpoint.pin(vertices.select("vid").distinct()
       .groupBy("vid").agg(SketchOps.regHllAgg(col("vid"), lgK).as("ball"))
       .select(col("vid"), col("ball"),
         SketchOps.regHllEstimate(col("ball")).as("size"),
@@ -257,10 +212,8 @@ object Neighborhood {
           (col("harm") + greatest(col("nsize") - col("size"), lit(0.0))
             / lit((round + 1).toDouble)).as("harm"),
           col("ndirty").as("dirty"))
-      val next = ckpt(merged) // keeps hash(vid, nPart)
-      val (nf, nd) = probe(next)
-      state.unpersist(false)
-      state = next
+      state = Fixpoint.pin(merged) // keeps hash(vid, nPart)
+      val (nf, nd) = probe(state)
       nDirty = nd
       round += 1
       curve ::= (round -> nf)
@@ -268,7 +221,6 @@ object Neighborhood {
     val balls = state
       .select(col("vid"), col("size").as("ball_size"), col("harm"))
       .localCheckpoint(true)
-    state.unpersist(false)
     a0.unpersist(false)
     (curve.reverse, balls)
   }

@@ -26,9 +26,11 @@ import org.apache.spark.storage.StorageLevel
   * iterative job (SURVEY.md §3.2(b)). Per iteration: one join (ranks⋈arcs —
   * broadcast when ranks are small, else sort-merge with AQE skew split),
   * one groupBy(dst) (map-side partial aggregation absorbs Zipf-hub in-degree
-  * skew), one Q-row driver collect. Lineage is truncated every
-  * `checkpointEvery` iterations; `checkpointDir` additionally persists
-  * rank/manifest state so a new driver resumes mid-convergence.
+  * skew), one Q-row driver collect. The loop follows [[Fixpoint]]: the
+  * state is truncated every `checkpointEvery` iterations, and with
+  * `checkpointDir` it is also written as a [[Fixpoint.Checkpoint]] (ranks
+  * plus one metadata row per query) at that cadence and at convergence,
+  * so a new driver resumes mid-convergence.
   */
 case class PprConfig(
     damping: Double = 0.5,
@@ -78,7 +80,7 @@ object Ppr {
     val dir = cfg.checkpointDir.getOrElse(
       throw new IllegalArgumentException("resume needs checkpointDir"))
     iterate(spark, arcs, nVertices, seeds, cfg,
-      prior = PprCheckpoint.readLatest(spark, dir))
+      prior = Fixpoint.Checkpoint.readLatest(spark, dir))
   }
 
   private def iterate(
@@ -87,14 +89,10 @@ object Ppr {
       nVertices: Long,
       seeds: DataFrame,
       cfg: PprConfig,
-      prior: Option[PprCheckpoint.State]): (DataFrame, PprStats) = {
+      prior: Option[Fixpoint.Checkpoint.Saved]): (DataFrame, PprStats) = {
 
     val t0 = System.nanoTime()
     val nPart = spark.sessionState.conf.numShufflePartitions
-    // ckpt = materialize + KEEP outputPartitioning + bounded stats — the
-    // HyperBall/k-core loop discipline (PlanUtils.dropOriginStats doc).
-    def ckpt(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graftx.PlanUtils.dropOriginStats(df.localCheckpoint(true))
     val outW = arcs.groupBy("src").agg(sum("weight").as("out_w"))
     // Pre-normalize transition weights once: nw = w / outW(src), and
     // PRE-HASH the arc table by its gather key (round-6 verdict #2, the
@@ -148,7 +146,7 @@ object Ppr {
       case Some(st) =>
         // support(ranks) ⊇ support(p) at every checkpoint — left joins
         // are complete.
-        st.ranks
+        st.state
           .join(p, Seq("qid", "vid"), "left")
           .join(danglingSeeds.withColumn("isd", lit(true)), Seq("qid", "vid"), "left")
           .select(col("qid"), col("vid"), col("x"),
@@ -159,25 +157,29 @@ object Ppr {
           .select(col("qid"), col("vid"), col("p").as("x"), col("p"),
             coalesce(col("isd"), lit(false)).as("isd"))
     }
-    // The state is persisted + re-leafed (constant-size plan); a
-    // localCheckpoint every `checkpointEvery` iterations truncates RDD
-    // lineage. NOTE the update's full_outer yields UNKNOWN output
-    // partitioning either way (its key columns are coalesced from both
-    // sides), so an every-iteration partitioning-preserving checkpoint
-    // would buy nothing and cost one extra job per sweep — the exchange
-    // math is unchanged: gather re-keys the state by vid, the transpose
-    // shuffles the contributions, the update re-keys the state by
-    // (qid, vid); all state-sized, never arc-sized.
-    var xLeaf = ckpt(initState.repartition(nPart, col("qid"), col("vid")))
-    var xCache = xLeaf
+    // The state is persisted + re-leafed (constant-size plan) and truncated
+    // every `checkpointEvery` iterations ([[Fixpoint.Lineage]]). NOTE the
+    // update's full_outer yields UNKNOWN output partitioning either way
+    // (its key columns are coalesced from both sides), so an
+    // every-iteration partitioning-preserving pin would buy nothing and
+    // cost one extra job per sweep — the exchange math is unchanged:
+    // gather re-keys the state by vid, the transpose shuffles the
+    // contributions, the update re-keys the state by (qid, vid); all
+    // state-sized, never arc-sized.
+    val lineage = new Fixpoint.Lineage(cfg.checkpointEvery)
+    var xLeaf = lineage.hold(Fixpoint.pin(initState.repartition(nPart, col("qid"), col("vid"))))
     var x = xLeaf.select("qid", "vid", "x")
-    var dangle: Map[Long, Double] = prior.map(_.dangle).getOrElse {
-      xLeaf.where(col("isd"))
+    // Per-query column `c` of the prior checkpoint's metadata rows.
+    def priorMeta(c: String): Map[Long, Double] = prior.toSeq.flatMap(_.meta)
+      .map(r => r.getAs[Long]("qid") -> r.getAs[Double](c)).toMap
+    var dangle: Map[Long, Double] =
+      if (prior.isDefined) priorMeta("ds")
+      else xLeaf.where(col("isd"))
         .groupBy("qid").agg(sum("x").as("ds"))
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    }
+    val priorErrs = priorMeta("err")
     var iter = prior.map(_.iter).getOrElse(0)
-    var converged = prior.exists(s => s.errs.nonEmpty && s.errs.values.forall(_ < threshold))
+    var converged = priorErrs.nonEmpty && priorErrs.values.forall(_ < threshold)
     val iter0 = iter
 
     while (iter < cfg.maxIter && !converged) {
@@ -212,50 +214,39 @@ object Ppr {
           coalesce(col("xold"), lit(0.0)).as("xo"),
           coalesce(col("p"), lit(0.0)).as("p"),
           coalesce(col("isd"), lit(false)).as("isd"))
-      // Materialize the new state as a partitioning-preserving leaf
-      // (constant-size plan, linear RDD lineage — the fused update
-      // references x twice, so an un-leafed plan would double per
-      // iteration), then read the convergence stats off the materialized
-      // partitions. ckpt every iteration replaces the old
-      // persist + every-K localCheckpoint pair: localCheckpoint is the
-      // only re-root that KEEPS outputPartitioning, which is what makes
-      // the update joins exchange-free.
       // Plan forensics (GRAFT_PPR_EXPLAIN=1): dump the first iteration's
       // formatted plan so Exchange counts are auditable from artifacts.
       if (iter == iter0 && sys.env.get("GRAFT_PPR_EXPLAIN").contains("1"))
         System.err.println("[ppr-plan]\n" + joined.queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
       // ONE action per iteration: the stats aggregate materializes the
-      // persisted state as a side effect (lineage truncated every
-      // checkpointEvery iters; re-leaf keeps the plan constant-size).
-      val joined0 = joined.persist(StorageLevel.MEMORY_AND_DISK)
-      val pinned =
-        if ((iter + 1) % cfg.checkpointEvery == 0) {
-          val chk = ckpt(joined0)
-          joined0.unpersist(false)
-          chk
-        } else joined0
-      val stats = pinned
-        .groupBy("qid")
-        .agg(
-          sum(abs(col("x") - col("xo"))).as("err"),
-          sum(when(col("isd"), col("x")).otherwise(0.0)).as("ds"))
-        .collect()
+      // round's state as a side effect, and the re-leaf keeps the next
+      // plan constant-size (the fused update references x twice, so an
+      // un-leafed plan would double per iteration).
+      val (state, stats) = lineage.round(iter + 1, joined) {
+        _.groupBy("qid")
+          .agg(
+            sum(abs(col("x") - col("xo"))).as("err"),
+            sum(when(col("isd"), col("x")).otherwise(0.0)).as("ds"))
+          .collect()
+      }
       val errs = stats.map(r => r.getLong(0) -> r.getDouble(1)).toMap
       dangle = stats.map(r => r.getLong(0) -> r.getDouble(2)).toMap
-      xCache.unpersist(false)
-      xCache = pinned
-      xLeaf = {
-        val proj = pinned.select("qid", "vid", "x", "p", "isd")
-        spark.createDataFrame(proj.rdd, proj.schema)
-      }
+      xLeaf = Fixpoint.leaf(state.select("qid", "vid", "x", "p", "isd"))
       x = xLeaf.select("qid", "vid", "x")
       iter += 1
       converged = errs.nonEmpty && errs.values.forall(_ < threshold)
       cfg.checkpointDir.foreach { dir =>
-        if (iter % cfg.checkpointEvery == 0 || converged)
-          PprCheckpoint.write(spark, dir, x.select("qid", "vid", "x"), iter, errs,
-            dangle, nVertices, nEdges, (System.nanoTime() - t0) / 1e9)
+        if (Fixpoint.due(iter, cfg.checkpointEvery) || converged) {
+          import spark.implicits._
+          val elapsed = (System.nanoTime() - t0) / 1e9
+          // One metadata row per query.
+          val meta = (errs.keySet ++ dangle.keySet).toSeq.sorted.map(q =>
+            (iter, q, errs.getOrElse(q, Double.NaN), dangle.getOrElse(q, 0.0),
+              nVertices, nEdges, elapsed))
+            .toDF("iter", "qid", "err", "ds", "nVertices", "nEdges", "elapsedSec")
+          Fixpoint.Checkpoint.write(dir, iter, x, meta)
+        }
       }
     }
     arcsN.unpersist(false)
@@ -269,7 +260,7 @@ object Ppr {
     // unpersist() and the ContextCleaner GCs its backing RDD with it.
     val result = x.select(col("qid"), col("vid"), col("x").as("score"))
       .localCheckpoint(true)
-    xCache.unpersist(false)
+    lineage.release()
     val wall = (System.nanoTime() - t0) / 1e9
     (result, PprStats(iter, converged, nEdges * (iter - iter0).toLong * nQueries, wall))
   }

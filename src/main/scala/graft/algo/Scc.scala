@@ -51,7 +51,9 @@ import org.apache.spark.sql.functions._
   * (spec-pinned on a 100-×-2-cycle chain).
   *
   * Output scc ids are canonical (min vid of the component), so results
-  * are partitioning- and schedule-invariant.
+  * are partitioning- and schedule-invariant. Every intermediate frame is
+  * a [[Fixpoint]] pin; the color and pivot-BFS loops are lazy rounds
+  * pinned every `batchRounds`.
   */
 object Scc {
 
@@ -73,12 +75,8 @@ object Scc {
           pivotsPerClass: Int = 16, localFinishMax: Long = 1L << 20): DataFrame = {
     if (LocalGraph.admit(localFinishMax, arcs, vertices).isDefined)
       return runLocalTarjan(LocalGraph.collect(arcs, Some(vertices)))
-    val spark = arcs.sparkSession
-    // pin = materialize + truncate lineage + BOUNDED stats (the raw
-    // localCheckpoint carries originStats whose sizeInBytes compounds
-    // through round-over-round joins — see PlanUtils.dropOriginStats).
-    def pin(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graftx.PlanUtils.dropOriginStats(df.localCheckpoint(true))
+    import Fixpoint.pin
+    val batchRounds = 4
 
     var active = pin(vertices.select("vid").distinct())
     var nActive = active.count()
@@ -117,15 +115,11 @@ object Scc {
           .join(active.select(col("vid").as("dst")), "dst"))
 
         // ---- 2. COLOR: max-vid forward reachability, run to fixpoint.
-        // `batchRounds` propagation hops run LAZILY between driver actions
-        // (LogicalRDD re-roots keep the plan flat, the Hits idiom): one
-        // pin+count per block instead of per hop — on a high-diameter
-        // region (a long cycle) this cuts driver round-trips 4×. The
-        // fixpoint test stays exact: values are monotone, so "no change
-        // in the block's LAST hop" == fixpoint.
-        def reRoot(df: DataFrame): DataFrame =
-          spark.createDataFrame(df.rdd, df.schema)
-        val batchRounds = 4
+        // Propagation hops are lazy rounds pinned every `batchRounds` (the
+        // Hits idiom): one pin+count per block instead of per hop — on a
+        // high-diameter region (a long cycle) this cuts driver round-trips
+        // 4×. The fixpoint test stays exact: values are monotone, so "no
+        // change in a pinned hop" == fixpoint.
         def colorStep(cur: DataFrame): DataFrame = {
           val incoming = cur.join(arcsActive, cur("vid") === arcsActive("src"))
             .groupBy(col("dst").as("vid"))
@@ -137,14 +131,11 @@ object Scc {
         }
         var colors = pin(active.select(col("vid"), col("vid").as("color")))
         var changed = 1L
+        var hop = 0
         while (changed > 0) {
-          var cur = colors
-          var b = 1
-          while (b < batchRounds) {
-            cur = reRoot(colorStep(cur).select("vid", "color")); b += 1
-          }
-          val next = pin(colorStep(cur))
-          changed = next.where(col("chg")).count()
+          hop += 1
+          val next = Fixpoint.lazyRound(hop, batchRounds, colorStep(colors))
+          if (Fixpoint.due(hop, batchRounds)) changed = next.where(col("chg")).count()
           colors = next.select("vid", "color")
         }
 
@@ -166,38 +157,35 @@ object Scc {
 
         // Simultaneous multi-pivot BFS to frontier EXHAUSTION (state rows
         // are (vid, pivot, color) pairs, ≤ pivotsPerClass × class size).
-        // Like the color loop, `batchRounds` frontier expansions run
-        // lazily per driver action; exhaustion = the reached set stopped
+        // Like the color loop, frontier expansions are lazy rounds pinned
+        // every `batchRounds`; exhaustion = the reached set stopped
         // growing across a whole block (monotone, so exact).
         def bfs(dir: DataFrame /* (from, to, color) */): DataFrame = {
           var reached = pin(pivots.select(
             col("pivot").as("vid"), col("pivot"), col("color")))
           var nReached = reached.count()
-          var frontier: DataFrame = reached
+          var r = reached
+          var f = reached
+          var hop = 0
           var grew = true
           while (grew) {
-            var r = reached
-            var f = frontier
-            var b = 0
-            while (b < batchRounds) {
-              val cand = dir.join(f.select(col("vid").as("from"),
-                  col("pivot"), col("color")), Seq("from", "color"))
-                .select(col("to").as("vid"), col("pivot"), col("color")).distinct()
-              f = reRoot(cand.join(r.select("vid", "pivot"),
-                Seq("vid", "pivot"), "left_anti"))
-              r = reRoot(r.unionByName(f))
-              b += 1
-            }
-            val nr = pin(r)
-            val n2 = nr.count()
-            grew = n2 > nReached
-            if (grew) {
-              // Flat re-derivation over two PINNED frames — carrying the
-              // lazy `f` across blocks would chain its RDD lineage.
-              frontier = nr.join(reached.select("vid", "pivot"),
-                Seq("vid", "pivot"), "left_anti")
-              reached = nr
-              nReached = n2
+            hop += 1
+            val cand = dir.join(f.select(col("vid").as("from"),
+                col("pivot"), col("color")), Seq("from", "color"))
+              .select(col("to").as("vid"), col("pivot"), col("color")).distinct()
+            f = Fixpoint.leaf(cand.join(r.select("vid", "pivot"),
+              Seq("vid", "pivot"), "left_anti"))
+            r = Fixpoint.lazyRound(hop, batchRounds, r.unionByName(f))
+            if (Fixpoint.due(hop, batchRounds)) {
+              val n2 = r.count()
+              grew = n2 > nReached
+              if (grew) {
+                // Flat re-derivation over two PINNED frames — carrying the
+                // lazy `f` across blocks would chain its RDD lineage.
+                f = r.join(reached.select("vid", "pivot"), Seq("vid", "pivot"), "left_anti")
+                reached = r
+                nReached = n2
+              }
             }
           }
           reached

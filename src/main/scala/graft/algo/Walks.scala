@@ -25,9 +25,9 @@ import org.apache.spark.storage.StorageLevel
   * history; each step is one 1:1 join against the degree table plus one
   * equi-join on (src, idx) against the indexed adjacency (no candidate
   * blowup: the choice index is computed BEFORE the adjacency join).
-  * `batchRounds` steps run lazily per action (the Hits idiom), and the
-  * indexed adjacency is built once — two window functions over one
-  * shuffle by src — and reused by every step.
+  * Steps are lazy [[Fixpoint]] rounds pinned every `batchRounds` (the
+  * Hits idiom), and the indexed adjacency is built once — two window
+  * functions over one shuffle by src — and reused by every step.
   */
 object Walks {
 
@@ -55,8 +55,6 @@ object Walks {
     if (admitted)
       return randomWalksLocal(LocalGraph.collect(arcs, Some(vertices)), walkLen,
         walksPerVertex, seed)
-    def reRoot(df: DataFrame): DataFrame = spark.createDataFrame(df.rdd, df.schema)
-
     val adj0 = arcs.select("src", "dst").distinct()
     val wIdx = Window.partitionBy("src").orderBy("dst")
     val indexed = adj0
@@ -68,40 +66,30 @@ object Walks {
 
     import spark.implicits._
     val walkIds = (0L until walksPerVertex.toLong).toDF("walk")
-    var state = vertices.select(col("vid").as("start"))
+    var cur = vertices.select(col("vid").as("start"))
       .crossJoin(broadcast(walkIds))
       .select(col("start"), col("walk"), col("start").as("cur"))
       .localCheckpoint(true)
     val out = scala.collection.mutable.ArrayBuffer[DataFrame](
-      state.select(col("start"), col("walk"), lit(0L).as("step"),
-        col("cur").as("vid")))
+      cur.select(col("start"), col("walk"), lit(0L).as("step"), col("cur").as("vid")))
 
-    var t = 1
-    while (t <= walkLen) {
-      var cur = state
-      val tEnd = math.min(t + batchRounds - 1, walkLen)
-      while (t <= tEnd) {
-        // Portable pick: first 8 md5 hex digits of "seed|start|walk|t".
-        val pick = conv(substring(md5(concat_ws("|",
-          lit(seed), col("start"), col("walk"), lit(t))), 1, 8), 16, 10)
-          .cast("long")
-        val chosen = cur
-          .join(degs.withColumnRenamed("src", "cur"), Seq("cur")) // dead ends drop
-          .withColumn("idx", pmod(pick, col("deg")))
-          .withColumnRenamed("cur", "src")
-          .join(indexed, Seq("src", "idx"))
-          .select(col("start"), col("walk"), col("dst").as("cur"))
-        out += chosen.select(col("start"), col("walk"), lit(t.toLong).as("step"),
-          col("cur").as("vid"))
-        cur = reRoot(chosen)
-        t += 1
-      }
-      state = cur.localCheckpoint(true)
-      // Rebase this batch's emitted slices onto the SAME materialization
-      // lineage: slices before the checkpoint would otherwise recompute
-      // their join chains per consumer. Cheap: each slice is state-shaped.
-      out(out.length - 1) = state.select(col("start"), col("walk"),
-        lit((t - 1).toLong).as("step"), col("cur").as("vid"))
+    for (t <- 1 to walkLen) {
+      // Portable pick: first 8 md5 hex digits of "seed|start|walk|t".
+      val pick = conv(substring(md5(concat_ws("|",
+        lit(seed), col("start"), col("walk"), lit(t))), 1, 8), 16, 10)
+        .cast("long")
+      val chosen = cur
+        .join(degs.withColumnRenamed("src", "cur"), Seq("cur")) // dead ends drop
+        .withColumn("idx", pmod(pick, col("deg")))
+        .withColumnRenamed("cur", "src")
+        .join(indexed, Seq("src", "idx"))
+        .select(col("start"), col("walk"), col("dst").as("cur"))
+      // Each step's slice reads the step's own leaf (or pin), so the
+      // final union reuses the steps' shuffles instead of re-running
+      // their join chains.
+      cur = Fixpoint.lazyRound(t, batchRounds, chosen, last = t == walkLen)
+      out += cur.select(col("start"), col("walk"), lit(t.toLong).as("step"),
+        col("cur").as("vid"))
     }
     val res = out.reduce(_ unionByName _).localCheckpoint(true)
     indexed.unpersist(false)
@@ -162,17 +150,20 @@ object Walks {
     * on walk ids (uniform by construction) then one on vertex pairs
     * (Zipf, but partial-agg absorbs the hubs).
     *
-    * @param walks (start, walk, step, vid) — [[randomWalks]] output.
-    *              (start, walk, step) must be unique, which randomWalks
-    *              guarantees for a duplicate-free vertex frame — steps
-    *              within a walk are consecutive, so `lead` by k rows IS
-    *              the pair at step distance k.
+    * @param walks (start, walk, step, vid) — [[randomWalks]] output. Rows
+    *              are deduplicated on (start, walk, step) first: a
+    *              duplicated vertex row repeats its walks, and a tied
+    *              step would make the window order arbitrary. Steps within
+    *              a walk are then consecutive and unique, so `lead` by k
+    *              rows IS the pair at step distance k. The dedup runs on
+    *              the window's own (start, walk) shuffle.
     * @return (center, context, pairs), pairs = co-occurrence count
     */
   def skipGramPairs(walks: DataFrame, window: Int): DataFrame = {
     require(window >= 1, s"window must be >= 1 (got $window)")
     val w = Window.partitionBy("start", "walk").orderBy("step")
-    val leads = walks.select(
+    val leads = walks.repartition(col("start"), col("walk"))
+      .dropDuplicates("start", "walk", "step").select(
       (col("vid") +: (1 to window).map(k => lead(col("vid"), k).over(w).as(s"l$k"))): _*)
     val pairs = (1 to window).map { k =>
       val present = leads.where(col(s"l$k").isNotNull)

@@ -14,9 +14,10 @@ import graft.algo.Neighborhood
   *
   * Measures wall/rounds/sketch-gather throughput at local[8] vs
   * local[32] interleaved (the north-rule N→4N protocol), and validates
-  * the estimates in-run: a handful of exact single-root BFS ball sizes
-  * (frame ops, O(reach) rows each) must match the per-vertex HLL
-  * estimates within sketch error.
+  * the estimates in-run: a handful of exact single-root ball sizes
+  * ([[Neighborhood.exactDistances]] with the root as its only vertex,
+  * O(reach) rows each) must match the per-vertex HLL estimates within
+  * sketch error.
   *
   *   sbt "runMain graft.bench.HyperBallProbe [nV] [nSamples] [lgK]"
   */
@@ -47,28 +48,11 @@ object HyperBallProbe {
       .distinct()
   }
 
-  /** Exact out-ball size of one root via frame BFS (for validation). */
+  /** Exact out-ball size of one root (for validation). */
   private def exactBallSize(arcs: DataFrame, root: Long, maxRounds: Int): Long = {
     val spark = arcs.sparkSession
     import spark.implicits._
-    def reRoot(df: DataFrame): DataFrame = spark.createDataFrame(df.rdd, df.schema)
-    var settled = reRoot(Seq(root).toDF("vid"))
-    var frontier = settled
-    var round = 0
-    var grew = true
-    while (grew && round < maxRounds) {
-      val fresh = arcs.join(frontier.withColumnRenamed("vid", "src"), "src")
-        .select(col("dst").as("vid")).distinct()
-        .join(settled, Seq("vid"), "left_anti")
-      val freshLeaf = reRoot(fresh)
-      grew = freshLeaf.limit(1).count() > 0L
-      if (grew) {
-        settled = reRoot(settled.unionByName(freshLeaf))
-        frontier = freshLeaf
-      }
-      round += 1
-    }
-    settled.count()
+    Neighborhood.exactDistances(arcs, Seq(root).toDF("vid"), maxRounds).count()
   }
 
   /** In-JVM sketch-merge ceiling: N threads stream register-max merges

@@ -255,23 +255,13 @@ object Indexer {
     // one commit's task tail with the next one's tasks. Only synonymy
     // (needs the synced entity embeddings) and the merged edge view
     // (needs all three families) are ordered after.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    try {
-      val fEntityE = pool.submit(new java.util.concurrent.Callable[DataFrame] {
-        def call(): DataFrame =
-          syncEmbeddings(store, chunksNow, ents, triplesNow, retain = true)
-      })
-      val others = Seq(
-        pool.submit(new Runnable { def run(): Unit = {
-          store.factEdges.commit(GraphBuild.factEdges(triplesNow), "rebuild"); () } }),
-        pool.submit(new Runnable { def run(): Unit = {
-          store.passageEdges.commit(GraphBuild.passageEdges(chunkEnts), "rebuild"); () } }),
-        pool.submit(new Runnable { def run(): Unit = {
-          store.vertices.commit(GraphBuild.vertices(ents, chunksNow), "merge"); () } }))
-      val entityE = fEntityE.get()
-      others.foreach(_.get())
-      store.synEdges.commit(synonymyEdges(entityE, syn), "rebuild")
-    } finally pool.shutdown()
+    val entityE = concurrently(store,
+      () => syncEmbeddings(store, chunksNow, ents, triplesNow, retain = true),
+      () => store.factEdges.commit(GraphBuild.factEdges(triplesNow), "rebuild"),
+      () => store.passageEdges.commit(GraphBuild.passageEdges(chunkEnts), "rebuild"),
+      () => store.vertices.commit(GraphBuild.vertices(ents, chunksNow), "merge")
+    ).head.asInstanceOf[DataFrame]
+    store.synEdges.commit(synonymyEdges(entityE, syn), "rebuild")
     val allEdges = GraphBuild.edges(
       store.factEdges.read(), store.passageEdges.read(), store.synEdges.read())
     store.edges.commit(allEdges, "merge")
@@ -402,21 +392,46 @@ object Indexer {
       Extract.factContent(col("subj"), col("pred"), col("obj")).as("content"))
     // The three per-table retain→upsert chains touch disjoint tables —
     // overlap them (guide 2.6); the entity chain's result is returned.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
+    def sync(table: graft.lake.SnapshotTable, rows: DataFrame,
+             embed: org.apache.spark.sql.Column => org.apache.spark.sql.Column) = () => {
+      if (retain) store.retainEmbeddings(table, rows.select("hash_id"))
+      store.upsertEmbeddings(table, rows, embed)
+    }
+    concurrently(store,
+      sync(store.chunkEmb, chunkRows, store.embedChunk),
+      sync(store.entityEmb, entRows, store.embedEntity),
+      sync(store.factEmb, factRows, store.embedFact))(1)
+  }
+
+  /** Run independent commits on their own threads; results in argument
+    * order. On the first failure the sibling commits' Spark jobs are
+    * cancelled through a job tag, and the siblings are waited for before
+    * the failure is rethrown, so no commit is still in flight when the
+    * caller sees it.
+    */
+  private def concurrently[A](store: GraphStore, commits: (() => A)*): Seq[A] = {
+    import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors,
+      TimeUnit}
+    val sc = store.spark.sparkContext
+    val tag = s"graft-indexer-${java.util.UUID.randomUUID()}"
+    val pool = Executors.newFixedThreadPool(commits.size)
+    val done = new ExecutorCompletionService[A](pool)
+    val futures = commits.map(c => done.submit(() => {
+      sc.addJobTag(tag)
+      try c() finally sc.removeJobTag(tag)
+    }))
     try {
-      def sync(table: graft.lake.SnapshotTable, rows: DataFrame,
-               embed: org.apache.spark.sql.Column => org.apache.spark.sql.Column) =
-        pool.submit(new java.util.concurrent.Callable[DataFrame] {
-          def call(): DataFrame = {
-            if (retain) store.retainEmbeddings(table, rows.select("hash_id"))
-            store.upsertEmbeddings(table, rows, embed)
-          }
-        })
-      val fChunk = sync(store.chunkEmb, chunkRows, store.embedChunk)
-      val fEntity = sync(store.entityEmb, entRows, store.embedEntity)
-      val fFact = sync(store.factEmb, factRows, store.embedFact)
-      fChunk.get(); fFact.get()
-      fEntity.get()
+      commits.foreach(_ => done.take().get())
+      futures.map(_.get())
+    } catch {
+      case e: ExecutionException =>
+        // No thread interrupts: an interrupted wait returns while its job
+        // runs on. Cancel until every sibling has returned, since one may
+        // submit its next job after a cancel.
+        pool.shutdown()
+        do sc.cancelJobsWithTag(tag)
+        while (!pool.awaitTermination(100, TimeUnit.MILLISECONDS))
+        throw e.getCause
     } finally pool.shutdown()
   }
 

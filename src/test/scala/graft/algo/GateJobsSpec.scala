@@ -61,6 +61,33 @@ class GateJobsSpec extends SparkSpec {
     assert(over.isEmpty, s"more jobs than the bound (name, gate, jobs): $over")
   }
 
+  test("distributed loops run no more Spark jobs than before") {
+    val dir = arcs(40, 160, 11L).distinct.toDF("src", "dst", "weight")
+    val und = dir.unionByName(dir.select($"dst".as("src"), $"src".as("dst"), $"weight"))
+    val verts = (0L until 40L).toDF("vid")
+    val seeds = Seq((0L, 0L, 1.0), (0L, 7L, 2.0), (1L, 3L, 1.0)).toDF("qid", "vid", "weight")
+    // A fresh directory per call: a committed checkpoint would be resumed.
+    def fresh(): Option[String] =
+      Some(java.nio.file.Files.createTempDirectory("graft_jobs_ckpt").toString)
+    val calls: Seq[(String, () => DataFrame)] = Seq(
+      "ppr" -> (() => Ppr.run(spark, und, 40L, seeds, PprConfig(tol = 1e-8))._1),
+      "ccMinLabel" -> (() => ConnectedComponents.runMinLabel(und, verts)._1),
+      "ccDurable" -> (() => ConnectedComponents.run(und, verts, preContract = false,
+        localFinishMax = 0L, checkpointDir = fresh(), diskCheckpointEvery = 1)._1))
+    val got = calls.map { case (name, call) =>
+      jobs(call()) // warm-up, as above
+      (name, jobs(call()))
+    }
+    got.foreach { case (name, n) => info(s"$name jobs=$n") }
+    val over = got.filter { case (name, n) => n > loopBounds(name) }
+    assert(over.isEmpty, s"more jobs than the bound (name, jobs): $over")
+  }
+
+  /** Job counts of the distributed loops on this fixture, measured before
+    * the loops moved onto [[Fixpoint]].
+    */
+  private val loopBounds = Map("ppr" -> 120, "ccMinLabel" -> 29, "ccDurable" -> 63)
+
   /** (gated, distributed) job counts of each entry point on this fixture,
     * measured when every kernel still collected its own graph.
     */

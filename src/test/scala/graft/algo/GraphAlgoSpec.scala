@@ -90,7 +90,7 @@ class GraphAlgoSpec extends SparkSpec {
       preContract = false, localFinishMax = 0L,
       checkpointDir = Some(dir), diskCheckpointEvery = 1, maxIter = 2)
     assert(partialRounds == 2)
-    val st = CcCheckpoint.readLatest(spark, dir)
+    val st = Fixpoint.Checkpoint.readLatest(spark, dir)
     assert(st.exists(_.iter == 2), "round-2 checkpoint must be committed")
     assert(new java.io.File(s"$dir/iter=2/partstats").exists,
       "per-partition lineage must be part of the checkpoint")
