@@ -1,7 +1,9 @@
 package graft.algo
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -41,7 +43,9 @@ import org.apache.spark.sql.graftx.PlanUtils
   *    cached round — bounded, and small enough for the next round to
   *    broadcast a small state, so they are kept. The round's action runs
   *    on the state; only then is the previous round's state released.
-  *    PPR, CC, LabelProp and BFS take this shape.
+  *    The truncations' checkpoints go with the last state, once the
+  *    loop's read-out is pinned. PPR, CC, LabelProp and BFS take this
+  *    shape.
   *  - lazy rounds ([[lazyRound]]): between pins a round's state is an
   *    unexecuted leaf, and the pin on a due (or last) round runs all rounds
   *    since the previous pin as one job. HITS, Walks and SCC's coloring and
@@ -71,6 +75,9 @@ object Fixpoint {
   /** The state cache of a loop with one action per round. */
   final class Lineage(checkpointEvery: Int) {
     private var held: Option[DataFrame] = None
+    // The RDDs the due rounds' localCheckpoints pinned: unpersisting the
+    // frame does not release them, and later states may read through them.
+    private var pins = List.empty[RDD[_]]
 
     /** Adopt the loop's initial state as the one the first round releases. */
     def hold(state: DataFrame): DataFrame = { held = Some(state); state }
@@ -83,15 +90,28 @@ object Fixpoint {
       val kept = next.persist(StorageLevel.MEMORY_AND_DISK)
       val state =
         if (!due(n, checkpointEvery)) kept
-        else { val c = kept.localCheckpoint(true); kept.unpersist(false); c }
+        else {
+          val c = kept.localCheckpoint(true)
+          kept.unpersist(false)
+          c.queryExecution.logical match {
+            case r: LogicalRDD => pins ::= r.rdd
+            case _ =>
+          }
+          c
+        }
       val out = action(state)
-      release()
+      held.foreach(_.unpersist(false))
       held = Some(state)
       (state, out)
     }
 
-    /** Release the current state (after the loop's read-out is pinned). */
-    def release(): Unit = { held.foreach(_.unpersist(false)); held = None }
+    /** Release the current state and every round's pin (after the loop's
+      * read-out is pinned).
+      */
+    def release(): Unit = {
+      held.foreach(_.unpersist(false)); held = None
+      pins.foreach(_.unpersist(false)); pins = Nil
+    }
   }
 
   /** Durable loop state, so a new driver resumes mid-convergence. Layout

@@ -103,12 +103,20 @@ object LabelProp {
         .select(col("vid"),
           coalesce(col("new_label"), col("label")).as("label"),
           (coalesce(col("new_label"), col("label")) =!= col("label")).as("chg"))
-      val (state, chg) = lineage.round(iter + 1, next)(_.where(col("chg")).count())
+      // The capped last round skips its changed count (nothing reads it):
+      // the read-out pin below materializes that round instead.
+      val last = iter + 1 == maxIter
+      val (state, chg) = lineage.round(iter + 1, next)(s =>
+        if (last) 0L else s.where(col("chg")).count())
       labels = state
       changed = chg
       iter += 1
     }
+    // Pin the read-out, then release the last round's state: a caller
+    // holds only the pin, and no round stays cached behind it.
+    val out = labels.select("vid", "label").localCheckpoint(true)
+    lineage.release()
     if (ownsCache) edges.unpersist(false)
-    (labels.select("vid", "label"), iter)
+    (out, iter)
   }
 }

@@ -3,6 +3,8 @@ package graft.lake
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.sql.graftx
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Minimal Iceberg-STYLE snapshot table: immutable Parquet segments + an
   * atomic manifest marker per snapshot. No Iceberg runtime jar exists in
@@ -26,6 +28,15 @@ import org.apache.spark.sql.functions.{col, count, lit}
   * ([[Observation]]) — never from re-scanning the just-written snapshot
   * (the old full-rewrite commit paid a second full read per commit).
   *
+  * Each manifest entry also records its segment's schema — the schema a
+  * read of that segment returns — so opening a snapshot runs no Spark job:
+  * every segment is read with `spark.read.schema(..)` instead of a
+  * Parquet schema-inference job per segment (Delta Lake keeps its schema
+  * in the commit log for the same reason). Entries without a recorded
+  * schema — manifests written before schemas were recorded, and the
+  * legacy `snap=<k>/data` layout — still infer it, so existing stores
+  * open unchanged.
+  *
   * Reads chain one anti-join per tombstone, so a long maintenance history
   * degrades scan plans; past [[maxEntries]] segments a commit folds into
   * a full compaction automatically ([[compact]] is also callable
@@ -41,8 +52,11 @@ class SnapshotTable(val spark: SparkSession, val root: String,
                     val maxEntries: Int = 32) {
   private def fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** One manifest entry: a data segment, or a tombstone keyed by `keys`. */
-  case class Entry(dir: String, kind: String, keys: Seq[String])
+  /** One manifest entry: a data segment, or a tombstone keyed by `keys`;
+    * `schema` is what a read of the segment returns (None: infer it).
+    */
+  case class Entry(dir: String, kind: String, keys: Seq[String],
+                   schema: Option[StructType] = None)
 
   case class Manifest(snapshot: Int, op: String, rows: Long,
                       appended: Long, removedKeys: Long, entries: Seq[Entry])
@@ -85,6 +99,11 @@ class SnapshotTable(val spark: SparkSession, val root: String,
             (e \ "keys") match {
               case JArray(ks) => ks.map(_.extract[String])
               case _ => Seq.empty
+            },
+            (e \ "schema") match {
+              case sch: JObject =>
+                Some(DataType.fromJson(JsonMethods.compact(sch)).asInstanceOf[StructType])
+              case _ => None
             })
         }
         // Legacy marker (pre-manifest format): the snapshot's data lives
@@ -103,7 +122,8 @@ class SnapshotTable(val spark: SparkSession, val root: String,
       case c => c.toString
     } + "\""
     val entries = m.entries.map { e =>
-      s"""{"dir":${jstr(e.dir)},"kind":${jstr(e.kind)},"keys":[${e.keys.map(jstr).mkString(",")}]}"""
+      s"""{"dir":${jstr(e.dir)},"kind":${jstr(e.kind)},"keys":[${e.keys.map(jstr).mkString(",")}]""" +
+        e.schema.map(sch => s""","schema":${sch.json}""").getOrElse("") + "}"
     }.mkString("[", ",", "]")
     val json = s"""{"snapshot":${m.snapshot},"op":${jstr(m.op)},"rows":${m.rows},""" +
       s""""appended":${m.appended},"removed_keys":${m.removedKeys},"entries":$entries}"""
@@ -112,21 +132,23 @@ class SnapshotTable(val spark: SparkSession, val root: String,
     out.close()
   }
 
-  /** Write `df` as an immutable segment; returns (relative dir, observed
-    * row count) — the count comes from the write job itself, no re-scan.
+  /** Write `df` as an immutable segment; returns its entry and the
+    * observed row count — the count comes from the write job itself, no
+    * re-scan. The entry's schema is `df`'s with every field nullable, as
+    * Spark reads any Parquet file back.
     * `keepEmpty` keeps a zero-row segment (full commits of an empty state
     * are legitimate and Spark writes a schema-carrying empty file);
     * delta paths drop empty segments instead of chaining no-op entries.
     */
-  private def writeSegment(df: DataFrame, role: String, snap: Int,
-                           keepEmpty: Boolean): (String, Long) = {
+  private def writeSegment(df: DataFrame, kind: String, keys: Seq[String], role: String,
+                           snap: Int, keepEmpty: Boolean): (Entry, Long) = {
     val rel = s"seg/$snap-$role"
     val obs = Observation()
     df.observe(obs, count(lit(1)).as("rows"))
       .write.mode(SaveMode.Overwrite).parquet(s"$root/$rel")
     val n = obs.get("rows").asInstanceOf[Long]
     if (n == 0L && !keepEmpty) fs.delete(new Path(s"$root/$rel"), true)
-    (rel, n)
+    (Entry(rel, kind, keys, Some(graftx.asNullable(df.schema))), n)
   }
 
   private def nextSnap: Int = currentSnapshot.getOrElse(0) + 1
@@ -137,9 +159,8 @@ class SnapshotTable(val spark: SparkSession, val root: String,
     */
   def commit(df: DataFrame, op: String): Int = {
     val next = nextSnap
-    val (dir, n) = writeSegment(df, "data", next, keepEmpty = true)
-    writeMarker(Manifest(next, op, n, appended = n, removedKeys = 0L,
-      Seq(Entry(dir, "data", Seq.empty))))
+    val (entry, n) = writeSegment(df, "data", Seq.empty, "data", next, keepEmpty = true)
+    writeMarker(Manifest(next, op, n, appended = n, removedKeys = 0L, Seq(entry)))
     next
   }
 
@@ -182,20 +203,20 @@ class SnapshotTable(val spark: SparkSession, val root: String,
     var removed = 0L
     var tombDir: Option[String] = None
     deleteKeys.foreach { dk =>
-      val (dir, n) = writeSegment(dk.select(keyCols.map(col): _*).distinct(),
-        "tomb", next, keepEmpty = false)
+      val (entry, n) = writeSegment(dk.select(keyCols.map(col): _*).distinct(),
+        "tombstone", keyCols, "tomb", next, keepEmpty = false)
       if (n > 0L) {
-        entries = entries :+ Entry(dir, "tombstone", keyCols)
-        removed = n; tombDir = Some(dir)
+        entries = entries :+ entry
+        removed = n; tombDir = Some(entry.dir)
       }
     }
     var appended = 0L
     var addDir: Option[String] = None
     append.foreach { a =>
-      val (dir, n) = writeSegment(a, "add", next, keepEmpty = false)
+      val (entry, n) = writeSegment(a, "data", Seq.empty, "add", next, keepEmpty = false)
       if (n > 0L) {
-        entries = entries :+ Entry(dir, "data", Seq.empty)
-        appended = n; addDir = Some(dir)
+        entries = entries :+ entry
+        appended = n; addDir = Some(entry.dir)
       }
     }
     // Both segments came back empty: the delta is a no-op — keep the
@@ -250,17 +271,18 @@ class SnapshotTable(val spark: SparkSession, val root: String,
 
   /** Fold the entry list: data segments union (by name — later segments
     * may carry upgraded schemas), tombstones anti-join everything before
-    * them. None iff the list is empty.
+    * them. None iff the list is empty. A segment with a recorded schema
+    * opens without a job; one without infers it (one job each).
     */
   private def assemble(entries: Seq[Entry]): Option[DataFrame] =
     entries.foldLeft(Option.empty[DataFrame]) { (acc, e) =>
+      def segment = e.schema.fold(spark.read)(spark.read.schema).parquet(s"$root/${e.dir}")
       e.kind match {
         case "data" =>
-          val d = spark.read.parquet(s"$root/${e.dir}")
+          val d = segment
           Some(acc.map(_.unionByName(d, allowMissingColumns = true)).getOrElse(d))
         case "tombstone" =>
-          val t = spark.read.parquet(s"$root/${e.dir}")
-          acc.map(_.join(t, e.keys, "left_anti"))
+          acc.map(_.join(segment, e.keys, "left_anti"))
         case other => throw new IllegalStateException(s"unknown entry kind $other")
       }
     }

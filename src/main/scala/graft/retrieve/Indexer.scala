@@ -72,12 +72,36 @@ object Indexer {
     * `changed` rows), `kept` = the stored rows that pass through
     * verbatim. `full` (= kept ∪ changed) is the complete end state — what
     * the pre-delta code committed wholesale; the store now writes only
-    * `changed` + a `changedSrcs` tombstone.
+    * `changed` + a `changedSrcs` tombstone. Both are pinned
+    * ([[pinDelta]]); `kept` stays lazy.
     */
   private[retrieve] case class SynDelta(changed: DataFrame, changedSrcs: DataFrame,
                                         kept: DataFrame) {
     def full: DataFrame = kept.unionByName(changed)
   }
+
+  /** Pin a Δ-sized frame of an incremental commit: one job materializes it
+    * as a leaf, before any commit reads it.
+    *
+    * The rule, for the incremental index and delete paths only: every
+    * Δ-sized intermediate that more than one action reads — the new
+    * chunks and triples, the new or dead entity ids, the victim triples,
+    * the synonymy delta's τ-accepted candidates, `changed` and
+    * `changedSrcs`, and the merged view's changed keys — is pinned once.
+    * A lazy one is re-derived by every consumer, from a full-corpus plan:
+    * the new-chunk anti-join re-hashed the corpus per action, the
+    * synonymy KNN ran up to four times per commit, and one commit's
+    * physical plan reached millions of characters, which the driver
+    * re-formats at every SQL execution (IndexerJobsSpec bounds both). A
+    * frame bound to a segment list from before a commit keeps those rows
+    * once pinned.
+    *
+    * `localCheckpoint` keeps the measured statistics of the pinned rows
+    * (unlike [[graft.algo.Fixpoint.pin]]): the frames are small, and the
+    * statistics let the planner broadcast them. The rebuild path pins
+    * nothing: its frames are corpus-sized and read once.
+    */
+  private def pinDelta(df: DataFrame): DataFrame = df.localCheckpoint(true)
 
   /** @param docs one row per document with a `content` string column; an
     *             optional `metadata` map<string,string> column is carried
@@ -102,14 +126,10 @@ object Indexer {
     val existing = store.currentChunks
     val hadChunks = !store.chunks.isEmpty
     val newChunks0 = incoming.join(existing.select("chunk_id"), Seq("chunk_id"), "left_anti")
-    // Incremental path: PIN the delta-sized new-chunk set. Every family
-    // delta below references it, and a lazy anti-join would re-derive the
-    // full-corpus chunk hashing + anti-join once PER ACTION — O(N) compute
-    // smeared over the O(Δ) path (measured: the +1% batch spent more wall
-    // re-deriving this plan than on all its own work). A fresh store keeps
-    // it lazy: its "delta" is the whole corpus, and the rebuild path reads
-    // the committed snapshot instead.
-    val newChunks = if (hadChunks) newChunks0.localCheckpoint(true) else newChunks0
+    // Incremental path: pin the delta-sized new-chunk set ([[pinDelta]]).
+    // A fresh store keeps it lazy: its "delta" is the whole corpus, and
+    // the rebuild path reads the committed snapshot instead.
+    val newChunks = if (hadChunks) pinDelta(newChunks0) else newChunks0
     // O(Δ) I/O: only the new chunks hit disk (append segment). The one
     // full rewrite left: upgrading a pre-metadata store's schema in place
     // (appending 3-col segments onto a 2-col snapshot would null-pad the
@@ -124,9 +144,7 @@ object Indexer {
     // (append segment — chunk ids are content hashes, disjoint from the
     // stored set by the anti-join above).
     val newTriples0 = extractor(newChunks)
-    // Same pinning argument: the delta path derives entities/facts/edges
-    // from these rows several times over.
-    val newTriples = if (hadChunks) newTriples0.localCheckpoint(true) else newTriples0
+    val newTriples = if (hadChunks) pinDelta(newTriples0) else newTriples0
     if (store.triples.isEmpty)
       lap("triples full commit")(store.triples.commit(newTriples, "index"))
     else lap("triples append")(store.triples.commitAppend(newTriples, "index"))
@@ -151,12 +169,13 @@ object Indexer {
     */
   def delete(store: GraphStore, docs: DataFrame, syn: SynonymyConfig = SynonymyConfig()): IndexStats = {
     val victims = Extract.chunks(docs, "content", Seq.empty).select("chunk_id")
-    // Bound to the PRE-delete snapshots (segments are immutable, so
-    // frames read before a commit keep reading the old segment files):
-    // the victim triples drive the edge-weight subtraction.
-    val victimTriples = store.currentTriples.join(victims, Seq("chunk_id"), "left_semi")
     val hadFamilies = !store.chunks.isEmpty && !store.factEdges.isEmpty
     if (hadFamilies) {
+      // The victim triples drive the edge-weight subtraction. Pinned
+      // before the tombstone commits below, so they hold the PRE-delete
+      // rows.
+      val victimTriples = pinDelta(
+        store.currentTriples.join(victims, Seq("chunk_id"), "left_semi"))
       // O(Δ) I/O: victims become tombstone segments keyed by chunk_id;
       // surviving rows are never rewritten.
       store.chunks.commitDelta(None, Some(victims), Seq("chunk_id"), "delete")
@@ -185,11 +204,10 @@ object Indexer {
     val triplesNow = store.triples.read()
     val ents = Extract.entities(Extract.chunkEntities(triplesNow))
 
-    // Dead = embedded before, unreferenced by any surviving chunk.
-    // Derived from the pre-retain embedding segments (immutable, so the
-    // later retain commit cannot disturb this frame).
-    val deadIds = store.entityEmb.readOrEmpty(store.embSchema).select("hash_id")
-      .join(ents.select(col("entity_id").as("hash_id")), Seq("hash_id"), "left_anti")
+    // Dead = embedded before, unreferenced by any surviving chunk:
+    // pinned from the pre-retain embedding segments.
+    val deadIds = pinDelta(store.entityEmb.readOrEmpty(store.embSchema).select("hash_id")
+      .join(ents.select(col("entity_id").as("hash_id")), Seq("hash_id"), "left_anti"))
 
     val entityE = syncEmbeddings(store, chunksNow, ents, triplesNow, retain = true)
 
@@ -227,12 +245,10 @@ object Indexer {
     // Merged edges: exactly the keys some family delta touched.
     val synOldPairs = storedSyn
       .join(sd.changedSrcs, Seq("src"), "left_semi").select("src", "dst")
-    val changedKeys = factChangedKeys.unionAll(passDroppedKeys)
+    val changedKeys = pinDelta(factChangedKeys.unionAll(passDroppedKeys)
       .unionAll(synOldPairs).unionAll(sd.changed.select("src", "dst"))
-      .distinct().persist()
-    changedKeys.count()
+      .distinct())
     commitMergedDelta(store, changedKeys, "delete-delta")
-    changedKeys.unpersist(false)
 
     // Vertices: dead entities + victim chunks disappear, nothing appears.
     val removedVerts = deadIds.select(col("hash_id").as("key"))
@@ -298,12 +314,13 @@ object Indexer {
     val entsNew = Extract.entities(chunkEntsNew)
     val newChunkRows = newChunks
 
-    // Which entity ids are NEW this batch (before the embedding upsert).
-    val oldEntityIds = store.entityEmb.readOrEmpty(store.embSchema).select("hash_id")
+    // Which entity ids are NEW this batch: pinned before the embedding
+    // upsert commits them.
+    val newEntityIds = pinDelta(entsNew.select(col("entity_id").as("hash_id"))
+      .join(store.entityEmb.readOrEmpty(store.embSchema).select("hash_id"),
+        Seq("hash_id"), "left_anti"))
     val entityE = lap("delta syncEmbeddings")(
       syncEmbeddings(store, newChunkRows, entsNew, newTriples, retain = false))
-    val newEntityIds = entsNew.select(col("entity_id").as("hash_id"))
-      .join(oldEntityIds, Seq("hash_id"), "left_anti")
 
     // Fact edges: counts over chunk-distinct triples are distributive
     // over the disjoint old/new chunk sets — ONLY the pairs present in
@@ -348,12 +365,10 @@ object Indexer {
       storedSyn.join(sd.changedSrcs, Seq("src"), "left_semi").select("src", "dst")
         .unionAll(sd.changed.select("src", "dst"))
     }
-    val changedKeys = synKeyParts
+    val changedKeys = lap("changedKeys")(pinDelta(synKeyParts
       .foldLeft(factChangedKeys.unionAll(passNew.select("src", "dst")))(_ unionAll _)
-      .distinct().persist()
-    lap("changedKeys")(changedKeys.count())
+      .distinct()))
     lap("commitMergedDelta")(commitMergedDelta(store, changedKeys, "index-delta"))
-    changedKeys.unpersist(false)
 
     // Vertices: new entities + new chunks append (keys are content
     // hashes — new by construction, so no dedup pass is needed).
@@ -564,18 +579,20 @@ object Indexer {
     // Only queries that gained a τ-accepted candidate can change: for any
     // other query, re-capping its stored list is the identity (the list
     // was produced by the same cap). Split accordingly so the store
-    // writes O(changed), not O(all lists).
-    val changedQids = newVsAll.select("qid").unionAll(oldVsNew.select("qid")).distinct()
+    // writes O(changed), not O(all lists). The candidates are pinned, so
+    // the KNN runs once for both outputs.
+    val accepted = pinDelta(newVsAll.select("qid", "kid", "score")
+      .unionByName(oldVsNew.select("qid", "kid", "score")))
+    val changedQids = accepted.select("qid").distinct()
     val changedMerged = storedSyn
       .select(col("src").as("qid"), col("dst").as("kid"), col("weight").as("score"))
       .join(changedQids, Seq("qid"), "left_semi")
-      .unionByName(newVsAll.select("qid", "kid", "score"))
-      .unionByName(oldVsNew.select("qid", "kid", "score"))
+      .unionByName(accepted)
       .dropDuplicates("qid", "kid")
     val kept = storedSyn
       .join(changedQids.select(col("qid").as("src")), Seq("src"), "left_anti")
-    SynDelta(capAccepted(changedMerged, syn),
-      changedQids.select(col("qid").as("src")), kept)
+    SynDelta(pinDelta(capAccepted(changedMerged, syn)),
+      pinDelta(changedQids.select(col("qid").as("src"))), kept)
   }
 
   /** I3 synonymy delta for delete. A stored capped list stays EXACTLY the
@@ -625,8 +642,8 @@ object Indexer {
     val changedSrcs = deadIds.select(col("hash_id").as("src"))
       .unionAll(affected.select(col("qid").as("src"))).distinct()
     val kept = storedSyn.join(changedSrcs, Seq("src"), "left_anti")
-    SynDelta(capAccepted(reKnn.select("qid", "kid", "score"), syn),
-      changedSrcs, kept)
+    SynDelta(pinDelta(capAccepted(reKnn.select("qid", "kid", "score"), syn)),
+      pinDelta(changedSrcs), kept)
   }
 
   /** τ-accepted candidates → per-query cap in (score desc, kid asc) order

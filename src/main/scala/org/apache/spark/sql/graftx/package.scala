@@ -1,19 +1,24 @@
 /** Bridge package: lives under org.apache.spark.sql so it can use the
   * `private[sql]` pieces of the classic Catalyst surface (Column ↔
-  * Expression conversion, AbstractDataType). Everything engine-specific
-  * stays in the `graft` packages; only the raw Catalyst expression and the
-  * two converters live here.
+  * Expression conversion, AbstractDataType, StructType.asNullable).
+  * Everything engine-specific stays in the `graft` packages; only the raw
+  * Catalyst expression and the three converters live here.
   */
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, FloatType,
+  StructType}
 
 package object graftx {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+  /** `s` with every field nullable, recursively: the schema Spark reads a
+    * Parquet file back with.
+    */
+  def asNullable(s: StructType): StructType = s.asNullable
 }
 
 package graftx {

@@ -6,7 +6,8 @@ import graft.SparkSpec
 import graft.graph.Adjacency
 
 /** The shared loop pieces of [[Fixpoint]]: durable checkpoints that only
-  * count once committed, and the walk corpus feeding skip-grams.
+  * count once committed, the walk corpus feeding skip-grams, and a loop's
+  * state cache released once its read-out is pinned.
   */
 class FixpointSpec extends SparkSpec {
   import spark.implicits._
@@ -70,5 +71,25 @@ class FixpointSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
       assert(pairs(dup) == pairs(verts), s"gate=$gate")
     }
+  }
+
+  test("distributed LabelProp leaves no round cached: only the read-out's own pin") {
+    val arcs = path(24)
+    val verts = (0L until 24L).toDF("vid")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val (labels, iters) = LabelProp.run(arcs, verts, maxIter = 7, checkpointEvery = 3,
+      localKernelMax = 0L)
+    assert(iters > 3, "the loop must pass a truncation round")
+    assert(labels.count() == 24L)
+    // The read-out is one localCheckpoint: a leaf over the RDD it pinned.
+    val own = labels.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => Some(r.rdd)
+      case _ => None
+    }
+    assert((sc.getPersistentRDDs.keySet -- before).subsetOf(own.map(_.id).toSet),
+      "a loop state is still cached after run returned")
+    own.foreach(_.unpersist(blocking = true))
+    assert(sc.getPersistentRDDs.size <= before.size)
   }
 }

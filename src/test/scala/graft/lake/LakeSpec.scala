@@ -191,4 +191,73 @@ class LakeSpec extends SparkSpec {
     assert(segRoot.listFiles().map(_.getName).toSet == live,
       "only segments referenced by surviving manifests may remain")
   }
+
+  /** A copy of `t` whose manifests record no schemas: every read infers
+    * it, as before manifests recorded schemas.
+    */
+  private def withoutSchemas(t: SnapshotTable): SnapshotTable = {
+    import java.nio.file.{Files, Paths}
+    import org.json4s.jackson.JsonMethods
+    val copy = Files.createTempDirectory("graft_lake_inferred").toString
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(t.root), new java.io.File(copy))
+    t.snapshots.foreach { k =>
+      val marker = Paths.get(s"$copy/snap=$k/_COMMITTED")
+      val json = JsonMethods.parse(new String(Files.readAllBytes(marker), "UTF-8"))
+        .removeField(_._1 == "schema")
+      Files.write(marker, JsonMethods.compact(json).getBytes("UTF-8"))
+      Files.deleteIfExists(Paths.get(s"$copy/snap=$k/._COMMITTED.crc"))
+    }
+    new SnapshotTable(spark, copy)
+  }
+
+  /** A frame's rows as a sorted list of strings, columns by name. */
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.select(df.columns.sorted.map(col).toIndexedSeq: _*).collect().map(_.toString).sorted.toSeq
+
+  test("manifests record each segment's read schema, and reads match inferred ones") {
+    import graft.retrieve.{GraphStore, Indexer}
+    val store = new GraphStore(spark,
+      java.nio.file.Files.createTempDirectory("graft_store").toString)
+    val docs = Seq("Alice visited Paris. Paris hosts Louvre.",
+      "Bob founded Acme. Acme acquired Paris Office.",
+      "Carol cites Alice. Carol visited Acme.")
+    val extra = Seq("Eve mentions Montebello. Montebello links Paris.")
+    Indexer.index(store, docs.toDF("content"))
+    Indexer.index(store, extra.toDF("content"))
+    Indexer.delete(store, extra.toDF("content"))
+    def check(stage: String): Unit = {
+      assert(store.tables.size == 10)
+      store.tables.foreach { t =>
+        val entries = t.snapshots.flatMap(t.manifest(_).entries).distinct
+        entries.foreach { e =>
+          val seg = s"${t.root}/${e.dir}"
+          assert(e.schema.contains(spark.read.parquet(seg).schema), s"$stage: $seg")
+        }
+        val inferred = withoutSchemas(t)
+        assert(inferred.manifest(inferred.currentSnapshot.get).entries.forall(_.schema.isEmpty))
+        assert(sortedRows(t.read()) == sortedRows(inferred.read()), s"$stage: ${t.root}")
+      }
+    }
+    check("after index and delete")
+    store.tables.foreach(_.compact())
+    check("after compaction")
+  }
+
+  test("a manifest entry without a recorded schema still reads") {
+    // Today's manifest format, written by hand, with no "schema" field.
+    val root = java.nio.file.Files.createTempDirectory("graft_noschema").toString
+    Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(s"$root/seg/1-data")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$root/snap=1"))
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(s"$root/snap=1/_COMMITTED"),
+      ("""{"snapshot":1,"op":"init","rows":2,"appended":2,"removed_keys":0,""" +
+        """"entries":[{"dir":"seg/1-data","kind":"data","keys":[]}]}""").getBytes("UTF-8"))
+    val t = new SnapshotTable(spark, root)
+    assert(t.manifest(1).entries.map(_.schema) == Seq(None))
+    assert(rows(t) == Set((1L, "a"), (2L, "b")))
+    t.commitDelta(Some(Seq((3L, "c")).toDF("id", "v")), Some(Seq(1L).toDF("id")),
+      Seq("id"), "delta")
+    assert(t.manifest(2).entries.map(_.schema.isDefined) == Seq(false, true, true))
+    assert(rows(t) == Set((2L, "b"), (3L, "c")))
+  }
 }
